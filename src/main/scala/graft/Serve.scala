@@ -133,6 +133,8 @@ object Serve {
       val n = spark.sql(s"SELECT count(*) FROM $v").head().getLong(0)
       println(f"[serve]   $v%-28s $n%6d rows")
     }
+    println("[serve] pipeline stages: " + result.stageSeconds
+      .map { case (stage, s) => f"$stage $s%.2f s" }.mkString(", "))
 
     if (flags.contains("--connect")) {
       views.foreach(v => spark.table(v).createOrReplaceGlobalTempView(v))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks replicated from the reference's DAG-tail
@@ -15,21 +15,25 @@ object DataQuality {
     override def toString = s"[${if (passed) "PASS" else "FAIL"}] $name = $value"
   }
 
+  /** A table's row count and the count of rows meeting `cond`, from one
+    * aggregate (one scan) instead of two `count()` jobs.
+    */
+  private def rowsAndCountIf(df: DataFrame, cond: Column): (Long, Long) = {
+    val r = df.agg(count(lit(1)), count_if(cond)).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** staging_dag.py:239-245 */
   def stagingChecks(staging: Map[String, DataFrame]): Seq[CheckResult] = {
-    val customers = staging("customers")
-    val products = staging("products")
+    val (rows, nullEmails) =
+      rowsAndCountIf(staging("customers"), col("email").isNull)
+    val badPrices = staging("products")
+      .filter(col("selling_price") <= 0 || col("cost_price") <= 0).count()
     Seq(
-      CheckResult("staging.customers.rows", customers.count(), passed = true),
-      {
-        val nullEmails = customers.filter(col("email").isNull).count()
-        CheckResult("staging.customers.null_emails", nullEmails, passed = true)
-      }, {
-        val badPrices = products
-          .filter(col("selling_price") <= 0 || col("cost_price") <= 0).count()
-        CheckResult("staging.products.nonpositive_prices", badPrices,
-          passed = badPrices == 0)
-      })
+      CheckResult("staging.customers.rows", rows, passed = true),
+      CheckResult("staging.customers.null_emails", nullEmails, passed = true),
+      CheckResult("staging.products.nonpositive_prices", badPrices,
+        passed = badPrices == 0))
   }
 
   /** warehouse_dag.py:468-474 — incl. the J12 orphan check as left_anti. */
@@ -55,10 +59,9 @@ object DataQuality {
   /** analytics_dag.py:471-481 */
   def analyticsChecks(customerMetrics: DataFrame,
       dailySales: DataFrame): Seq[CheckResult] = {
-    val cm = customerMetrics.count()
+    val (cm, nullChurn) =
+      rowsAndCountIf(customerMetrics, col("churn_risk_score").isNull)
     val ds = dailySales.count()
-    val nullChurn =
-      customerMetrics.filter(col("churn_risk_score").isNull).count()
     Seq(
       CheckResult("analytics.customer_metrics.rows", cm, cm > 0),
       CheckResult("analytics.daily_sales.rows", ds, ds > 0),

@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end driver: CSV → staging → warehouse (SCD2 dims + facts) →
   * analytics (KPI tables + views), mirroring the reference's three DAGs
-  * (`staging_dag.py`, `warehouse_dag.py`, `analytics_dag.py`) with the
-  * same intra-stage dependency order. `asOf` replaces every
+  * (`staging_dag.py`, `warehouse_dag.py`, `analytics_dag.py`) in the same
+  * stage order, each stage's independent builds running concurrently
+  * (see [[Pipeline.run]]). `asOf` replaces every
   * CURRENT_DATE so runs are reproducible (§2.8 gotcha 11). Each stage
   * persists parquet, so stages are independently re-runnable — and fact
   * tables are written partitioned by order month (the Spark analogue of
   * the reference's monthly RANGE partitioning) so date-filtered reads
-  * prune at the source.
+  * prune at the source. `stageSeconds` holds each stage's wall time in
+  * run order (staging, warehouse, analytics, dq), next to the stage's
+  * data-quality results in `checks`; callers that compose the stages
+  * themselves may leave it empty.
   */
 final case class PipelineResult(
     staging: Map[String, DataFrame],
@@ -31,7 +35,8 @@ final case class PipelineResult(
     monthlyTrends: DataFrame,
     customerAcquisition: DataFrame,
     campaignAttribution: DataFrame,
-    checks: Seq[DataQuality.CheckResult]) {
+    checks: Seq[DataQuality.CheckResult],
+    stageSeconds: Seq[(String, Double)] = Nil) {
 
   /** Serving layer: register every analytics table and view as temp
     * views with the reference's `public.*` mirror names
@@ -82,15 +87,46 @@ object Pipeline {
       round((col("selling_price") - col("cost_price"))
         / col("selling_price") * 100, 2))
 
+  /** Runs the three DAGs in the reference's stage order — staging, then
+    * warehouse, then analytics, then the data-quality checks — and within
+    * each stage submits the independent table builds together through
+    * [[FanOut.all]], joining once before the next stage. The stages map
+    * onto the reference's task graphs (SURVEY.md §3.1-3.3):
+    *  - staging: the seven CSV loads ([[StagingJob.run]]; the reference's
+    *    "4 parallel loads", staging_dag.py:299);
+    *  - warehouse: the eight dim and fact writes. The reference orders
+    *    `[dim_customers, dim_products, dim_time] >> fact_*`
+    *    (warehouse_dag.py:552-563); here every fact is planned from the
+    *    dims' lazy plans over staging, so all eight writes are
+    *    independent;
+    *  - analytics: the six KPI writes (the fan-outs of
+    *    analytics_dag.py:546-550; `campaign_attribution` is planned from
+    *    `daily_sales`'s plan, not its output);
+    *  - DQ: the three check groups.
+    * Every stage reads the previous stage's persisted parquet. The builds
+    * are mostly single-task jobs, so concurrency is bounded by Spark's
+    * `local[N]` slots alone; there is no pool-size setting to tune.
+    * A failing build fails the run with its own exception once its
+    * siblings have ended, so nothing is still writing into `outDir` when
+    * `run` returns or throws.
+    */
   def run(spark: SparkSession, csvDir: String, outDir: String,
       asOfDate: LocalDate): PipelineResult = {
     val asOf = lit(java.sql.Date.valueOf(asOfDate))
+    val stageSeconds = Seq.newBuilder[(String, Double)]
+    def stage[A](name: String)(body: => A): A = {
+      val t0 = System.nanoTime()
+      val out = body
+      stageSeconds += name -> (System.nanoTime() - t0) / 1e9
+      out
+    }
 
     // ---- DAG 1: staging ------------------------------------------------
-    val staging = StagingJob.run(spark, csvDir, s"$outDir/staging")
+    val staging = stage("staging") {
+      StagingJob.run(spark, csvDir, s"$outDir/staging")
+    }
 
     // ---- DAG 2: warehouse ---------------------------------------------
-    // dims first (parallel in the reference task graph), then facts.
     val dimTime = DimTime.build(staging("orders"), existing = None)
 
     val stagedCustomers = customerDimColumns(staging("customers"))
@@ -124,14 +160,17 @@ object Pipeline {
         .parquet(s"$outDir/warehouse/$name")
       spark.read.parquet(s"$outDir/warehouse/$name")
     }
-    val wDimCustomers = persist(dimCustomers, "dim_customers")
-    val wDimProducts = persist(dimProducts, "dim_products")
-    val wDimTime = persist(dimTime, "dim_time")
-    val wDimCampaigns = persist(dimCampaigns, "dim_marketing_campaigns")
-    val wFactOrders = persistFact(factOrders, "fact_orders")
-    val wFactOrderItems = persistFact(factOrderItems, "fact_order_items")
-    val wFactClickstream = persist(factClickstream, "fact_clickstream")
-    val wFactInventory = persist(factInventory, "fact_inventory")
+    val Seq(wDimCustomers, wDimProducts, wDimTime, wDimCampaigns,
+        wFactOrders, wFactOrderItems, wFactClickstream, wFactInventory) =
+      stage("warehouse")(FanOut.all(Seq(
+        () => persist(dimCustomers, "dim_customers"),
+        () => persist(dimProducts, "dim_products"),
+        () => persist(dimTime, "dim_time"),
+        () => persist(dimCampaigns, "dim_marketing_campaigns"),
+        () => persistFact(factOrders, "fact_orders"),
+        () => persistFact(factOrderItems, "fact_order_items"),
+        () => persist(factClickstream, "fact_clickstream"),
+        () => persist(factInventory, "fact_inventory"))))
 
     // ---- DAG 3: analytics ---------------------------------------------
     val customerMetrics = AnalyticsJob.customerMetrics(wDimCustomers,
@@ -149,20 +188,26 @@ object Pipeline {
       df.write.mode("overwrite").parquet(s"$outDir/analytics/$name")
       spark.read.parquet(s"$outDir/analytics/$name")
     }
-    val aCustomerMetrics = persistA(customerMetrics, "customer_metrics")
-    val aProductMetrics = persistA(productMetrics, "product_metrics")
-    val aDailySales = persistA(dailySales, "daily_sales")
-    val aMonthlyTrends = persistA(monthlyTrends, "monthly_trends")
-    val aAcquisition = persistA(customerAcquisition, "customer_acquisition")
-    val aAttribution = persistA(campaignAttribution, "campaign_attribution")
+    val Seq(aCustomerMetrics, aProductMetrics, aDailySales, aMonthlyTrends,
+        aAcquisition, aAttribution) = stage("analytics")(FanOut.all(Seq(
+      () => persistA(customerMetrics, "customer_metrics"),
+      () => persistA(productMetrics, "product_metrics"),
+      () => persistA(dailySales, "daily_sales"),
+      () => persistA(monthlyTrends, "monthly_trends"),
+      () => persistA(customerAcquisition, "customer_acquisition"),
+      () => persistA(campaignAttribution, "campaign_attribution"))))
 
-    val checks = DataQuality.stagingChecks(staging) ++
-      DataQuality.warehouseChecks(wDimCustomers, wDimProducts, wFactOrders) ++
-      DataQuality.analyticsChecks(aCustomerMetrics, aDailySales)
+    val checks = stage("dq")(FanOut.all(Seq(
+      () => DataQuality.stagingChecks(staging),
+      () => DataQuality.warehouseChecks(wDimCustomers, wDimProducts,
+        wFactOrders),
+      () => DataQuality.analyticsChecks(aCustomerMetrics, aDailySales)))
+      .flatten)
 
     PipelineResult(staging, wDimCustomers, wDimProducts, wDimTime,
       wDimCampaigns, wFactOrders, wFactOrderItems, wFactClickstream,
       wFactInventory, aCustomerMetrics, aProductMetrics, aDailySales,
-      aMonthlyTrends, aAcquisition, aAttribution, checks)
+      aMonthlyTrends, aAcquisition, aAttribution, checks,
+      stageSeconds.result())
   }
 }

@@ -128,6 +128,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(failed.isEmpty, s"failed checks: ${failed.mkString("; ")}")
   }
 
+  test("data-quality checks: names, order, values and verdicts pinned on the fixture") {
+    val got = result.checks.map(c => (c.name, c.value, c.passed))
+    assert(got == Seq(
+      ("staging.customers.rows", 50L, true),
+      ("staging.customers.null_emails", 3L, true),
+      ("staging.products.nonpositive_prices", 0L, true),
+      ("warehouse.dim_customers.current", 50L, true),
+      ("warehouse.dim_products.current", 20L, true),
+      ("warehouse.fact_orders.rows", 200L, true),
+      ("warehouse.fact_orders.orphaned", 0L, true),
+      ("analytics.customer_metrics.rows", 50L, true),
+      ("analytics.daily_sales.rows", 158L, true),
+      ("analytics.customer_metrics.null_churn", 0L, true)))
+  }
+
+  test("stage timings: one wall time per stage, in run order") {
+    assert(result.stageSeconds.map(_._1) ==
+      Seq("staging", "warehouse", "analytics", "dq"))
+    assert(result.stageSeconds.forall(_._2 > 0))
+  }
+
   test("serving surface: all public_* views register and answer SQL") {
     result.registerViews(spark)
     graft.Serve.registerCorpusViews(spark, "/root/testdata/sf0.001")
