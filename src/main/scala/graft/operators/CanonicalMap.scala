@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Layout
+
 /** The PERSISTED form of q121's dedup-aware split — the production
   * shape NOTES sketched: instead of recomputing LSH + cluster resolve
   * inside every gate query, the (doc_id, canonical_id) map is
@@ -50,26 +52,12 @@ object CanonicalMap {
     */
   def write(docs: DataFrame, table: String, nBuckets: Int,
       dupThreshold: Double = 0.8): Unit = {
-    val spark = docs.sparkSession
-    // same crashed-writer hygiene as DedupIndex.write: drop table AND
-    // any orphan location before recreating
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = org.apache.hadoop.fs.FileSystem.get(loc,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val pairs = DedupQueries.lshVerifiedPairs(docs)
       .filter(col("jaccard") >= dupThreshold)
-    DedupCluster.resolve(pairs)
-      .select(col("id").as("doc_id"), col("canonical_id"))
-      .write
-      .format("parquet")
-      .bucketBy(nBuckets, "doc_id")
-      .sortBy("doc_id")
-      .mode("overwrite")
-      .saveAsTable(table)
+    // resolve's eager round jobs run before the writer drops the table
+    Layout.writeBucketed(DedupCluster.resolve(pairs)
+        .select(col("id").as("doc_id"), col("canonical_id")),
+      table, nBuckets, "doc_id")
   }
 
   /** Batch split assignment from the persisted map — q121's semantics

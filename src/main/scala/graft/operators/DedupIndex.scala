@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Layout
+
 /** The persisted side of incremental dedup (q71): the corpus's LSH band
   * index as a BUCKETED table, hash-clustered on the probe join key
   * (band, bucket) at write time. Each ingest batch then computes only
@@ -23,25 +25,9 @@ object DedupIndex {
   /** Build and persist the band index for `docs` (doc_id, text),
     * bucketed and per-bucket sorted on (band, bucket).
     */
-  def write(docs: DataFrame, table: String, nBuckets: Int): Unit = {
-    val spark = docs.sparkSession
-    // full rebuild: drop any prior index AND its location (a crashed
-    // writer can leave an orphan directory that blocks CREATE TABLE)
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = org.apache.hadoop.fs.FileSystem.get(loc,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    DedupQueries.bandIndex(docs)
-      .write
-      .format("parquet")
-      .bucketBy(nBuckets, "band", "bucket")
-      .sortBy("band", "bucket")
-      .mode("overwrite")
-      .saveAsTable(table)
-  }
+  def write(docs: DataFrame, table: String, nBuckets: Int): Unit =
+    Layout.writeBucketed(DedupQueries.bandIndex(docs), table, nBuckets,
+      "band", "bucket")
 
   /** Probe the persisted index with a new batch: distinct candidate
     * (new_id, corpus_id) pairs whose band keys collide. Only the batch

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Layout
+
 /** The persisted side of incremental EXACT-SUBSTRING dedup — q128's
   * [[DedupIndex]] analogue, completing the per-tier story: every dedup
   * tier (whole-doc near-dup via the band index, exact spans via this)
@@ -31,24 +33,9 @@ object SpanIndex {
     */
   def write(docs: DataFrame, table: String, nBuckets: Int,
       gramK: Int = DedupQueries.SpanGramK,
-      winnowW: Int = DedupQueries.SpanWinnowW): Unit = {
-    val spark = docs.sparkSession
-    // crashed-writer hygiene (the DedupIndex.write convention)
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = org.apache.hadoop.fs.FileSystem.get(loc,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fingerprints(docs, gramK, winnowW)
-      .write
-      .format("parquet")
-      .bucketBy(nBuckets, "fp")
-      .sortBy("fp")
-      .mode("overwrite")
-      .saveAsTable(table)
-  }
+      winnowW: Int = DedupQueries.SpanWinnowW): Unit =
+    Layout.writeBucketed(fingerprints(docs, gramK, winnowW), table, nBuckets,
+      "fp")
 
   /** (doc_id, fp) winnowed fingerprints for any (doc_id, text) frame —
     * the q128 candidate key, distinct per document by construction.
@@ -88,7 +75,18 @@ object SpanIndex {
   def flagIncremental(spark: SparkSession, table: String,
       corpusDocs: DataFrame, newDocs: DataFrame): DataFrame = {
     val base = newDocs.select(col("doc_id"), col("text"))
-    val cand = probeCandidates(spark, table, base)
+    flagCandidates(probeCandidates(spark, table, base), corpusDocs, base)
+      .orderBy(col("doc_id"))
+  }
+
+  /** The verify-and-flag step of [[flagIncremental]] over any candidate
+    * (new_id, corpus_id) frame: SharedSpan verify against `corpusDocs`,
+    * earliest verified sharer, then the q128 flags for every row of
+    * `base` (doc_id, text), unordered. The span stream calls it with
+    * candidates from the base index and its deltas.
+    */
+  def flagCandidates(cand: DataFrame, corpusDocs: DataFrame,
+      base: DataFrame): DataFrame = {
     val verified = cand
       .join(base.select(col("doc_id").as("new_id"), col("text").as("b_text")),
         Seq("new_id"))
@@ -106,7 +104,6 @@ object SpanIndex {
       .select(col("doc_id"), col("n_tokens"),
         col("dup_of").isNotNull.cast("int").as("is_exact_dup"),
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-      .orderBy(col("doc_id"))
   }
 
   /** Persist the EVAL side of q132's span-fraction decontamination as a

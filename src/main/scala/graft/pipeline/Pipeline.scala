@@ -75,6 +75,16 @@ final case class PipelineResult(
 
 object Pipeline {
 
+  /** Writes `df` to `path` as parquet, replacing what is there and
+    * partitioned by `partitionCols` (none by default), then reads it back
+    * — the hand-off every stage gives the next.
+    */
+  private[pipeline] def persist(df: DataFrame, path: String,
+      partitionCols: Seq[String] = Nil): DataFrame = {
+    graft.sources.Layout.writePartitioned(df, path, partitionCols)
+    df.sparkSession.read.parquet(path)
+  }
+
   /** Derived dim columns the reference adds during SCD2 load:
     * full_name (P6, NULL-propagating concat) and profit_margin (P7).
     */
@@ -149,28 +159,22 @@ object Pipeline {
       dimTime)
 
     // Persist warehouse, facts partitioned monthly (partition pruning).
-    def persist(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$outDir/warehouse/$name")
-      spark.read.parquet(s"$outDir/warehouse/$name")
-    }
-    def persistFact(df: DataFrame, name: String): DataFrame = {
-      df.withColumn("order_month",
-        (col("order_date_key") / 100).cast("int"))
-        .write.mode("overwrite").partitionBy("order_month")
-        .parquet(s"$outDir/warehouse/$name")
-      spark.read.parquet(s"$outDir/warehouse/$name")
-    }
+    val wh = s"$outDir/warehouse"
+    def monthly(fact: DataFrame): DataFrame =
+      fact.withColumn("order_month", (col("order_date_key") / 100).cast("int"))
     val Seq(wDimCustomers, wDimProducts, wDimTime, wDimCampaigns,
         wFactOrders, wFactOrderItems, wFactClickstream, wFactInventory) =
       stage("warehouse")(FanOut.all(Seq(
-        () => persist(dimCustomers, "dim_customers"),
-        () => persist(dimProducts, "dim_products"),
-        () => persist(dimTime, "dim_time"),
-        () => persist(dimCampaigns, "dim_marketing_campaigns"),
-        () => persistFact(factOrders, "fact_orders"),
-        () => persistFact(factOrderItems, "fact_order_items"),
-        () => persist(factClickstream, "fact_clickstream"),
-        () => persist(factInventory, "fact_inventory"))))
+        () => persist(dimCustomers, s"$wh/dim_customers"),
+        () => persist(dimProducts, s"$wh/dim_products"),
+        () => persist(dimTime, s"$wh/dim_time"),
+        () => persist(dimCampaigns, s"$wh/dim_marketing_campaigns"),
+        () => persist(monthly(factOrders), s"$wh/fact_orders",
+          Seq("order_month")),
+        () => persist(monthly(factOrderItems), s"$wh/fact_order_items",
+          Seq("order_month")),
+        () => persist(factClickstream, s"$wh/fact_clickstream"),
+        () => persist(factInventory, s"$wh/fact_inventory"))))
 
     // ---- DAG 3: analytics ---------------------------------------------
     val customerMetrics = AnalyticsJob.customerMetrics(wDimCustomers,
@@ -184,18 +188,15 @@ object Pipeline {
     val campaignAttribution = AnalyticsJob.campaignAttribution(wDimCampaigns,
       dailySales)
 
-    def persistA(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$outDir/analytics/$name")
-      spark.read.parquet(s"$outDir/analytics/$name")
-    }
+    val an = s"$outDir/analytics"
     val Seq(aCustomerMetrics, aProductMetrics, aDailySales, aMonthlyTrends,
         aAcquisition, aAttribution) = stage("analytics")(FanOut.all(Seq(
-      () => persistA(customerMetrics, "customer_metrics"),
-      () => persistA(productMetrics, "product_metrics"),
-      () => persistA(dailySales, "daily_sales"),
-      () => persistA(monthlyTrends, "monthly_trends"),
-      () => persistA(customerAcquisition, "customer_acquisition"),
-      () => persistA(campaignAttribution, "campaign_attribution"))))
+      () => persist(customerMetrics, s"$an/customer_metrics"),
+      () => persist(productMetrics, s"$an/product_metrics"),
+      () => persist(dailySales, s"$an/daily_sales"),
+      () => persist(monthlyTrends, s"$an/monthly_trends"),
+      () => persist(customerAcquisition, s"$an/customer_acquisition"),
+      () => persist(campaignAttribution, s"$an/campaign_attribution"))))
 
     val checks = stage("dq")(FanOut.all(Seq(
       () => DataQuality.stagingChecks(staging),

@@ -7,7 +7,7 @@ import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Staging layer: CSV → validated, cleaned, typed parquet
   * (reference DAG 1, `staging_dag.py`). The reference's 1000-row pandas
@@ -29,8 +29,7 @@ object StagingJob {
 
   /** The header row of every data file under `path` (one CSV file, or a
     * directory of part files as Spark writes them), read on the driver:
-    * one line per file, no Spark job. The schema'd read cannot serve
-    * here, as it names its columns from the schema, not from the file.
+    * one line per file, no Spark job.
     */
   private def csvHeaders(spark: SparkSession, path: String): Seq[Seq[String]] = {
     val root = new Path(path)
@@ -47,12 +46,34 @@ object StagingJob {
     }.map(line => parser.parseLine(line).toSeq)
   }
 
-  /** S1/S2: schema'd CSV read (never inferSchema in the production path). */
-  def readCsv(spark: SparkSession, csvDir: String, table: String): DataFrame =
-    spark.read
-      .schema(Schemas.staging(table))
+  /** S1-S3: typed CSV read by header name (never inferSchema in the
+    * production path). Every part file's header is validated and must be
+    * the same; the read schema follows that header's column order, typed
+    * from [[Schemas.staging]] (string for columns it does not know), so a
+    * reordered or widened header maps each value to its own column. The
+    * result has exactly the canonical columns, in canonical order, with
+    * a typed null for an optional column the header lacks.
+    */
+  def readCsv(spark: SparkSession, csvDir: String, table: String): DataFrame = {
+    val path = s"$csvDir/$table.csv"
+    val canonical = Schemas.staging(table)
+    val headers = csvHeaders(spark, path).distinct
+    headers.foreach(header => validateHeader(header, table))
+    if (headers.size > 1) throw new IllegalArgumentException(
+      s"staging table '$table' has part files with different headers: " +
+        headers.map(_.mkString(",")).mkString(" | "))
+    // no header at all (only empty files) reads no rows
+    val header = headers.headOption.getOrElse(canonical.fieldNames.toSeq)
+    val typed = canonical.fields.map(f => f.name -> f).toMap
+    val read = spark.read
+      .schema(StructType(header.map(n =>
+        typed.getOrElse(n, StructField(n, StringType)))))
       .option("header", "true")
-      .csv(s"$csvDir/$table.csv")
+      .csv(path)
+    read.select(canonical.fields.toSeq.map(f =>
+      if (header.contains(f.name)) read.col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)): _*)
+  }
 
   /** Per-table cleaning, replicating staging_dag.py exactly. */
   def clean(table: String, df: DataFrame): DataFrame = table match {
@@ -71,15 +92,11 @@ object StagingJob {
     case _ => df
   }
 
+  /** S5: full-replace semantics, atomically. */
   def loadTable(spark: SparkSession, csvDir: String, outDir: String,
-      table: String): DataFrame = {
-    csvHeaders(spark, s"$csvDir/$table.csv")
-      .foreach(header => validateHeader(header, table))
-    val cleaned = clean(table, readCsv(spark, csvDir, table))
-    // S5: full-replace semantics, atomically.
-    cleaned.write.mode("overwrite").parquet(s"$outDir/$table")
-    spark.read.parquet(s"$outDir/$table")
-  }
+      table: String): DataFrame =
+    Pipeline.persist(clean(table, readCsv(spark, csvDir, table)),
+      s"$outDir/$table")
 
   /** DAG 1: loads the seven tables concurrently, the reference's
     * parallel loads (staging_dag.py:299), through [[FanOut.all]]. The

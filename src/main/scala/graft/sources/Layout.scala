@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Physical data layout management — the knobs that decide how much of
   * 100 TB a query actually reads:
@@ -21,6 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     vectorized readers, NameNode/listing pressure); streaming sinks
   *     and incremental ingests produce it constantly, so compaction is
   *     regular maintenance, not a one-off.
+  *   - [[writeBucketed]]: hash-bucket + sort a catalog table on its join
+  *     key at write time. A join on that key then reads the table bucket
+  *     by bucket in place: the table side is never re-exchanged, only
+  *     the other side shuffles. Every persisted probe index (band, span,
+  *     canonical map, vector) is written through it.
   */
 object Layout {
 
@@ -38,6 +44,29 @@ object Layout {
     df.repartitionByRange(numFiles, df(clusterCol))
       .sortWithinPartitions(clusterCol)
       .write.mode("overwrite").parquet(path)
+
+  /** (Re)build `table` as a parquet catalog table, hash-bucketed into
+    * `nBuckets` and sorted within each bucket on `keys`. Bucket metadata
+    * lives in the session catalog, hence a managed table rather than a
+    * bare path. A full rebuild: the prior table is dropped, and so is any
+    * orphan directory at the catalog's default location (a writer that
+    * crashed mid-write leaves one, and it blocks CREATE TABLE).
+    */
+  def writeBucketed(df: DataFrame, table: String, nBuckets: Int,
+      keys: String*): Unit = {
+    val spark = df.sparkSession
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    val loc = new Path(
+      spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+    df.write
+      .format("parquet")
+      .bucketBy(nBuckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
+      .mode("overwrite")
+      .saveAsTable(table)
+  }
 
   /** Total bytes of parquet part-files under `path` (recursive). */
   private[sources] def dataBytes(spark: SparkSession, path: String): Long = {

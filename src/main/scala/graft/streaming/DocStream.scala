@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
-import graft.operators.{DedupIndex, DedupQueries}
+import graft.operators.{DedupIndex, DedupQueries, SpanIndex}
 
 /** Structured Streaming over a document feed — the streaming face of the
   * incremental-dedup pipeline (q71/[[DedupIndex]]).
@@ -15,13 +15,14 @@ import graft.operators.{DedupIndex, DedupQueries}
   * (band, bucket) groups would grow state with the corpus forever — the
   * unbounded-state anti-pattern). It lives in persisted, restart-safe
   * artifacts, and — since round 7 — every per-batch write is KEYED BY
-  * BATCH ID and written with overwrite, so an at-least-once foreachBatch
-  * replay rewrites its own partition instead of duplicating rows:
+  * BATCH ID and written with overwrite ([[BatchStore]]'s `batch=<id>`
+  * partitions), so an at-least-once foreachBatch replay rewrites its own
+  * partition instead of duplicating rows:
   *
-  *   - matches land under `matches/batch=<id>` (overwrite);
-  *   - admitted docs land under `docs/batch=<id>` (overwrite);
-  *   - the batch's LSH band keys land under `index_delta/batch=<id>`
-  *     (overwrite). The corpus-scale BUCKETED band index ([[DedupIndex]],
+  *   - matches land in the batch's partition of the matches store;
+  *   - admitted docs land in the batch's partition of the docs store;
+  *   - the batch's LSH band keys land in its partition of the index
+  *     delta store. The corpus-scale BUCKETED band index ([[DedupIndex]],
   *     hash-clustered on the probe join key so probes shuffle only the
   *     batch) is created EMPTY up front and populated only by
   *     [[compact]], which folds the accumulated deltas in — an LSM
@@ -101,71 +102,53 @@ object DocStream {
     val spark = batch.sparkSession
     val b = batch.select(col("doc_id"), col("text")).persist()
     try {
-      if (!spark.catalog.tableExists(st.indexTable)) {
-        // a missing base alongside a NON-empty admitted store means a
-        // crash hit compact() between its DROP and its commit — rebuild
-        // from the source of truth instead of creating an empty base
-        // (which would silently drop all compacted probe state)
-        if (BatchStore.listBatchIds(spark, st.docsPath).nonEmpty)
-          compact(spark, st)
-        else DedupIndex.write(b.limit(0), st.indexTable, st.nBuckets)
-      }
-      val priorBatches = BatchStore.listBatchIds(spark, st.docsPath)
-        .filter(_ < batchId)
-      val cand = probeAll(spark, st, b, batchId, priorBatches)
-      if (cand.nonEmpty) {
-        val corpus = spark.read
-          .parquet(priorBatches.map(id => s"${st.docsPath}/batch=$id"): _*)
-        val matches = DedupQueries.verifyCandidates(cand.get, b, corpus)
+      BatchStore.ensureBase(spark, st.indexTable, st.docsPath)(
+        compact(spark, st),
+        DedupIndex.write(b.limit(0), st.indexTable, st.nBuckets))
+      // no prior batch (the first, or a replay of it): nothing to probe
+      BatchStore.readBefore(spark, st.docsPath, batchId).foreach { corpus =>
+        val cand = candidates(spark, b, batchId,
+          DedupIndex.probeCandidates(spark, st.indexTable, b), deltaDir(st),
+          DedupQueries.bandIndex(b), "band", "bucket")
+        DedupQueries.verifyCandidates(cand, b, corpus)
           .filter(col("jaccard") >= st.verifyThreshold)
           .withColumn("is_dup",
             (col("jaccard") >= st.dupThreshold).cast("int"))
-        matches.write.mode("overwrite")
-          .parquet(s"${st.matchesPath}/batch=$batchId")
+          .write.mode("overwrite")
+          .parquet(BatchStore.path(st.matchesPath, batchId))
       }
       // admit: band keys to this batch's delta partition, docs to this
       // batch's docs partition — both full-partition overwrites
       DedupQueries.bandIndex(b).write.mode("overwrite")
-        .parquet(s"${deltaDir(st)}/batch=$batchId")
-      b.write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId")
+        .parquet(BatchStore.path(deltaDir(st), batchId))
+      b.write.mode("overwrite").parquet(BatchStore.path(st.docsPath, batchId))
     } finally b.unpersist()
   }
 
-  /** Candidate (new_id, corpus_id) pairs for `b` against base ∪ deltas
-    * from batches admitted BEFORE `batchId`; None when no prior batch
-    * exists (first batch, or a replay of it).
+  /** Candidate (new_id, corpus_id) pairs for `b`: the `base` probe of the
+    * bucketed index plus a probe of the deltas under `deltaRoot` admitted
+    * BEFORE `batchId` (later ones would drop at the corpus join anyway),
+    * both on `keys`. `keyed` holds b's (doc_id, keys) rows.
     */
-  private def probeAll(spark: SparkSession, st: DedupState,
-      b: DataFrame, batchId: Long, priorBatches: Seq[Long]): Option[DataFrame] = {
-    if (priorBatches.isEmpty) return None
-    val base = DedupIndex.probeCandidates(spark, st.indexTable, b)
-    val dd = deltaDir(st)
-    // list batch partitions explicitly: a concurrent compact may leave
-    // the root present but empty (schema inference over an empty dir
-    // throws), and listing pins exactly which deltas this probe reads;
-    // only PRIOR deltas probe (replay value-idempotence — see
-    // processBatch), the rest drop at the corpus join anyway
-    val deltaBatches = BatchStore.listBatchIds(spark, dd).filter(_ < batchId)
-    val withDelta =
-      if (deltaBatches.isEmpty) base
-      else {
-        val fresh = DedupQueries.bandIndex(b)
-          .select(col("band"), col("bucket"), col("doc_id").as("new_id"))
-        val deltaCand = spark.read
-          .parquet(deltaBatches.map(id => s"$dd/batch=$id"): _*)
-          .select(col("band"), col("bucket"), col("doc_id").as("corpus_id"))
-          .join(fresh, Seq("band", "bucket"))
-          .select(col("new_id"), col("corpus_id"))
-        base.unionByName(deltaCand)
-      }
+  private def candidates(spark: SparkSession, b: DataFrame, batchId: Long,
+      base: DataFrame, deltaRoot: String, keyed: DataFrame,
+      keys: String*): DataFrame = {
+    def probe(index: DataFrame, id: String) =
+      index.select(keys.map(col) :+ col("doc_id").as(id): _*)
+    val all = BatchStore.readBefore(spark, deltaRoot, batchId).fold(base) {
+      delta =>
+        base.unionByName(probe(delta, "corpus_id")
+          .join(probe(keyed, "new_id"), keys)
+          .select(col("new_id"), col("corpus_id")))
+    }
     // exclude the batch's own documents from the corpus side: the
     // compacted base is not batch-keyed, so a replayed batch still
     // probes an index containing itself — without this, every replayed
     // document matches its own admitted copy (and q71 semantics exclude
     // batch-internal pairs anyway)
-    Some(withDelta.distinct()
+    all.distinct()
       .join(b.select(col("doc_id").as("corpus_id")), Seq("corpus_id"),
-        "left_anti"))
+        "left_anti")
   }
 
   /** Streaming CURATION GATE: run the q126 filter stack (row-local
@@ -191,14 +174,14 @@ object DocStream {
         val labeled = graft.operators.TextQueries.filterStack(
           batch.select(col("doc_id"), col("lang"), col("text")))
         labeled.write.mode("overwrite")
-          .parquet(s"$outPath/labeled/batch=$batchId")
+          .parquet(BatchStore.path(s"$outPath/labeled", batchId))
         // histogram derived from the labeled frame (one source of
         // truth); tiny (#reasons rows), coalesced to one file
         labeled.groupBy(col("reason"))
           .agg(count(lit(1)).as("n_docs"))
           .coalesce(1)
           .write.mode("overwrite")
-          .parquet(s"$outPath/reasons/batch=$batchId")
+          .parquet(BatchStore.path(s"$outPath/reasons", batchId))
       })
 
   /** Streaming TRAINED-MODEL scoring: apply a FROZEN weight vector
@@ -225,7 +208,7 @@ object DocStream {
               col("text")),
             weights)
           .write.mode("overwrite")
-          .parquet(s"$outPath/scored/batch=$batchId")
+          .parquet(BatchStore.path(s"$outPath/scored", batchId))
       })
 
   /** Where streaming exact-substring dedup keeps its persisted state:
@@ -258,79 +241,38 @@ object DocStream {
       .foreachBatch((batch: DataFrame, batchId: Long) =>
         processSpanBatch(batch, batchId, state))
 
+  /** One micro-batch of the span stream: probe base ∪ prior deltas,
+    * then [[SpanIndex.flagCandidates]] (SharedSpan verify, earliest
+    * admitted sharer), then admit. The replay VALUE-idempotence rule of
+    * [[processBatch]] holds unchanged: delta probes and the corpus text
+    * join see only batches with id < `batchId`, so dup_of can never
+    * point at a later document (DocStreamSpec pins it).
+    */
   private[streaming] def processSpanBatch(batch: DataFrame, batchId: Long,
       st: SpanState): Unit = {
-    import graft.operators.{DedupQueries, SpanIndex}
     val spark = batch.sparkSession
     val b = batch.select(col("doc_id"), col("text")).persist()
     try {
-      if (!spark.catalog.tableExists(st.indexTable)) {
-        if (BatchStore.listBatchIds(spark, st.docsPath).nonEmpty)
-          compactSpans(spark, st)
-        else SpanIndex.write(b.limit(0), st.indexTable, st.nBuckets)
-      }
-      // probe base ∪ deltas; verify; flag (earliest admitted sharer).
-      // Replay VALUE-idempotence (r10 ADVICE): delta probes and the
-      // corpus text join are restricted to batches with id < the
-      // current batchId, so a replay — same checkpoint or a fresh one
-      // re-processing the same drops in order — sees exactly the state
-      // the original run saw: a stale base candidate against a
-      // LATER-admitted doc drops at the corpus join, dup_of can never
-      // point at a later document, and the earliest-sharer convention
-      // survives re-processing value-for-value (DocStreamSpec pins it).
-      val priorBatches = BatchStore.listBatchIds(spark, st.docsPath)
-        .filter(_ < batchId)
-      val flags =
-        if (priorBatches.isEmpty)
+      BatchStore.ensureBase(spark, st.indexTable, st.docsPath)(
+        compactSpans(spark, st),
+        SpanIndex.write(b.limit(0), st.indexTable, st.nBuckets))
+      val flags = BatchStore.readBefore(spark, st.docsPath, batchId) match {
+        case None =>
           b.select(col("doc_id"),
             size(graft.functions.TextFunctions.tokens(col("text")))
               .cast("long").as("n_tokens"),
             lit(0).as("is_exact_dup"), lit(-1L).as("dup_of"))
-        else {
-          val base = SpanIndex.probeCandidates(spark, st.indexTable, b)
-          val dd = spanDeltaDir(st)
-          val deltaBatches = BatchStore.listBatchIds(spark, dd)
-            .filter(_ < batchId)
-          val cand0 =
-            if (deltaBatches.isEmpty) base
-            else {
-              val fresh = SpanIndex.fingerprints(b)
-                .select(col("fp"), col("doc_id").as("new_id"))
-              base.unionByName(spark.read
-                .parquet(deltaBatches.map(id => s"$dd/batch=$id"): _*)
-                .select(col("fp"), col("doc_id").as("corpus_id"))
-                .join(fresh, Seq("fp"))
-                .select(col("new_id"), col("corpus_id")))
-            }
-          // the compacted base is not batch-keyed, so a replayed batch
-          // still probes an index containing itself — exclude
-          val cand = cand0.distinct()
-            .join(b.select(col("doc_id").as("corpus_id")), Seq("corpus_id"),
-              "left_anti")
-          val corpus = spark.read
-            .parquet(priorBatches.map(id => s"${st.docsPath}/batch=$id"): _*)
-          val verified = cand
-            .join(b.select(col("doc_id").as("new_id"), col("text").as("b_text")),
-              Seq("new_id"))
-            .join(corpus.select(col("doc_id").as("corpus_id"),
-                col("text").as("a_text")),
-              Seq("corpus_id"))
-            .filter(graft.functions.SharedSpan.sharedSpan(col("a_text"),
-              col("b_text"), DedupQueries.SpanTokens))
-            .groupBy(col("new_id")).agg(min(col("corpus_id")).as("dup_of"))
-          b.select(col("doc_id"),
-              size(graft.functions.TextFunctions.tokens(col("text")))
-                .cast("long").as("n_tokens"))
-            .join(verified.withColumnRenamed("new_id", "doc_id"),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), col("n_tokens"),
-              col("dup_of").isNotNull.cast("int").as("is_exact_dup"),
-              coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-        }
-      flags.write.mode("overwrite").parquet(s"${st.flagsPath}/batch=$batchId")
+        case Some(corpus) =>
+          SpanIndex.flagCandidates(candidates(spark, b, batchId,
+              SpanIndex.probeCandidates(spark, st.indexTable, b),
+              spanDeltaDir(st), SpanIndex.fingerprints(b), "fp"),
+            corpus, b)
+      }
+      flags.write.mode("overwrite")
+        .parquet(BatchStore.path(st.flagsPath, batchId))
       SpanIndex.fingerprints(b).write.mode("overwrite")
-        .parquet(s"${spanDeltaDir(st)}/batch=$batchId")
-      b.write.mode("overwrite").parquet(s"${st.docsPath}/batch=$batchId")
+        .parquet(BatchStore.path(spanDeltaDir(st), batchId))
+      b.write.mode("overwrite").parquet(BatchStore.path(st.docsPath, batchId))
     } finally b.unpersist()
   }
 
@@ -338,16 +280,9 @@ object DocStream {
     * the admitted store — the [[compact]] crash-safety argument applies
     * unchanged) and drop exactly the deltas the snapshot covers.
     */
-  def compactSpans(spark: SparkSession, st: SpanState): Unit = {
-    import graft.operators.SpanIndex
-    val snapshot = BatchStore.listBatchIds(spark, st.docsPath)
-    if (snapshot.isEmpty) return
-    val docs = spark.read
-      .parquet(snapshot.map(id => s"${st.docsPath}/batch=$id"): _*)
-      .select(col("doc_id"), col("text"))
-    SpanIndex.write(docs, st.indexTable, st.nBuckets)
-    BatchStore.deleteBatches(spark, spanDeltaDir(st), snapshot)
-  }
+  def compactSpans(spark: SparkSession, st: SpanState): Unit =
+    BatchStore.compact(spark, st.docsPath, spanDeltaDir(st), "doc_id", "text")(
+      SpanIndex.write(_, st.indexTable, st.nBuckets))
 
   /** Fold the accumulated delta partitions into the bucketed base table
     * and drop them, restoring the fully exchange-free probe. Rebuilds
@@ -361,13 +296,7 @@ object DocStream {
     * compact folds it) instead of being silently dropped by a
     * whole-directory delete.
     */
-  def compact(spark: SparkSession, st: DedupState): Unit = {
-    val snapshot = BatchStore.listBatchIds(spark, st.docsPath)
-    if (snapshot.isEmpty) return
-    val docs = spark.read
-      .parquet(snapshot.map(id => s"${st.docsPath}/batch=$id"): _*)
-      .select(col("doc_id"), col("text"))
-    DedupIndex.write(docs, st.indexTable, st.nBuckets)
-    BatchStore.deleteBatches(spark, deltaDir(st), snapshot)
-  }
+  def compact(spark: SparkSession, st: DedupState): Unit =
+    BatchStore.compact(spark, st.docsPath, deltaDir(st), "doc_id", "text")(
+      DedupIndex.write(_, st.indexTable, st.nBuckets))
 }

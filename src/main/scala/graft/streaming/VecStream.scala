@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.CosineSim.cosineFused
 import graft.functions.HyperplaneBucket.hyperplaneBucketFused
+import graft.sources.Layout
 
 /** Structured Streaming over an embedding feed — the streaming face of
   * the ANN stack (q41's hyperplane-LSH buckets), the vector sibling of
@@ -16,11 +17,12 @@ import graft.functions.HyperplaneBucket.hyperplaneBucketFused
   * persisted, restart-safe artifacts with the LSM shape DocStream
   * proved out:
   *
-  *   - near-duplicate matches land under `matches/batch=<id>`
-  *     (overwrite — an at-least-once replay rewrites its partition);
-  *   - admitted vectors land under `vecs/batch=<id>` (overwrite);
-  *   - each batch's (bucket, vec_id, embedding) rows land under
-  *     `vecs_index_delta/batch=<id>` (overwrite). The corpus-scale
+  *   - near-duplicate matches land in the batch's partition of the
+  *     matches store (overwrite — an at-least-once replay rewrites its
+  *     partition; [[BatchStore]] owns the layout);
+  *   - admitted vectors land in the batch's partition of the vecs store;
+  *   - each batch's (bucket, vec_id, embedding) rows land in its
+  *     partition of the index delta store. The corpus-scale
   *     BUCKETED index (hash-clustered on the LSH bucket — the probe
   *     join key) is created empty up front and populated only by
   *     [[compact]]: writes go to small idempotent deltas, probes read
@@ -77,22 +79,8 @@ object VecStream {
     * [[graft.operators.DedupIndex.write]]).
     */
   def writeIndex(vecs: DataFrame, table: String, nPlanes: Int,
-      nBuckets: Int): Unit = {
-    val spark = vecs.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = org.apache.hadoop.fs.FileSystem.get(loc,
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    indexRows(vecs, nPlanes)
-      .write.format("parquet")
-      .bucketBy(nBuckets, "bucket")
-      .sortBy("bucket")
-      .mode("overwrite")
-      .saveAsTable(table)
-  }
+      nBuckets: Int): Unit =
+    Layout.writeBucketed(indexRows(vecs, nPlanes), table, nBuckets, "bucket")
 
   /** The streaming incremental near-dup detection: every micro-batch of
     * vectors is scored against everything admitted before it. Start
@@ -108,74 +96,62 @@ object VecStream {
     * cosine-score colliding pairs, keep those at/above the threshold,
     * then admit. Probe runs BEFORE the admit writes and excludes the
     * batch's own ids, so a replayed batch (whose vectors are already in
-    * state) produces the same matches and rewrites the same partitions
-    * — every write is batch-keyed overwrite.
+    * state) rewrites the same partitions — every write is batch-keyed
+    * overwrite. Replay VALUE-idempotence is [[DocStream.processBatch]]'s
+    * rule: the probe sees only vectors admitted before `batchId`, so a
+    * replay against later state yields the matches its first run did.
     */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
       st: AnnState): Unit = {
     val spark = batch.sparkSession
     val b = batch.select(col("vec_id"), col("embedding")).persist()
     try {
-      if (!spark.catalog.tableExists(st.indexTable)) {
-        // a missing base alongside a NON-empty admitted store means a
-        // crash hit compact() between its DROP and its commit — rebuild
-        // from the source of truth instead of creating an empty base
-        // (which would silently drop all compacted probe state)
-        if (BatchStore.listBatchIds(spark, st.vecsPath).nonEmpty)
-          compact(spark, st)
-        else writeIndex(b.limit(0), st.indexTable, st.nPlanes, st.nBuckets)
-      }
-      probeAll(spark, st, b).foreach { cand =>
-        val matches = cand
-          .filter(col("cos_sim") >= st.simThreshold)
-        matches.write.mode("overwrite")
-          .parquet(s"${st.matchesPath}/batch=$batchId")
+      BatchStore.ensureBase(spark, st.indexTable, st.vecsPath)(
+        compact(spark, st),
+        writeIndex(b.limit(0), st.indexTable, st.nPlanes, st.nBuckets))
+      probeAll(spark, st, b, batchId).foreach { cand =>
+        cand.filter(col("cos_sim") >= st.simThreshold)
+          .write.mode("overwrite")
+          .parquet(BatchStore.path(st.matchesPath, batchId))
       }
       indexRows(b, st.nPlanes).write.mode("overwrite")
-        .parquet(s"${deltaDir(st)}/batch=$batchId")
-      b.write.mode("overwrite").parquet(s"${st.vecsPath}/batch=$batchId")
+        .parquet(BatchStore.path(deltaDir(st), batchId))
+      b.write.mode("overwrite").parquet(BatchStore.path(st.vecsPath, batchId))
     } finally b.unpersist()
   }
 
   /** Scored candidate (new_id, corpus_id, cos_sim) rows for `b` against
-    * base ∪ deltas; None when nothing has been admitted yet. Only the
-    * batch side of the base probe shuffles (bucketed-table property).
+    * base ∪ deltas, restricted to vectors admitted before `batchId`;
+    * None when there are none. Only the batch side of the base probe
+    * shuffles (bucketed-table property).
     */
-  private def probeAll(spark: SparkSession, st: AnnState,
-      b: DataFrame): Option[DataFrame] = {
-    // resolve each path against ITS OWN filesystem (state may live on a
-    // non-default scheme; FileSystem.get(conf) would answer for the
-    // wrong one or throw)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val vp = new org.apache.hadoop.fs.Path(st.vecsPath)
-    if (!vp.getFileSystem(conf).exists(vp)) return None
-    val fresh = indexRows(b, st.nPlanes)
-      .select(col("bucket"), col("vec_id").as("new_id"),
-        col("embedding").as("new_emb"))
-    def score(corpus: DataFrame): DataFrame =
-      corpus
-        .select(col("bucket"), col("vec_id").as("corpus_id"),
-          col("embedding").as("corpus_emb"))
-        .join(fresh, Seq("bucket"))
-        .select(col("new_id"), col("corpus_id"),
-          cosineFused(col("new_emb"), col("corpus_emb")).as("cos_sim"))
-    val base = score(spark.table(st.indexTable))
-    // list batch partitions explicitly (empty-root and probe-snapshot
-    // rationale in DocStream.probeAll)
-    val deltaBatches = BatchStore.listBatchIds(spark, deltaDir(st))
-    val all =
-      if (deltaBatches.isEmpty) base
-      else base.unionByName(
-        score(spark.read
-          .parquet(deltaBatches.map(id => s"${deltaDir(st)}/batch=$id"): _*)
-          .select(col("bucket"), col("vec_id"), col("embedding"))))
-    // a vector can sit in base AND an unfolded delta only inside a
-    // crashed-compaction window; pairs are otherwise unique (single
-    // probe bucket per vector)
-    Some(all.dropDuplicates("new_id", "corpus_id")
-      .join(b.select(col("vec_id").as("corpus_id")), Seq("corpus_id"),
-        "left_anti"))
-  }
+  private def probeAll(spark: SparkSession, st: AnnState, b: DataFrame,
+      batchId: Long): Option[DataFrame] =
+    BatchStore.readBefore(spark, st.vecsPath, batchId).map { prior =>
+      val fresh = indexRows(b, st.nPlanes)
+        .select(col("bucket"), col("vec_id").as("new_id"),
+          col("embedding").as("new_emb"))
+      def score(corpus: DataFrame): DataFrame =
+        corpus
+          .select(col("bucket"), col("vec_id").as("corpus_id"),
+            col("embedding").as("corpus_emb"))
+          .join(fresh, Seq("bucket"))
+          .select(col("new_id"), col("corpus_id"),
+            cosineFused(col("new_emb"), col("corpus_emb")).as("cos_sim"))
+      val base = score(spark.table(st.indexTable))
+      val all = BatchStore.readBefore(spark, deltaDir(st), batchId)
+        .fold(base)(delta => base.unionByName(score(delta)))
+      // a vector can sit in base AND an unfolded delta only inside a
+      // crashed-compaction window; pairs are otherwise unique (single
+      // probe bucket per vector). The compacted base is not batch-keyed:
+      // keep only corpus vectors admitted before this batch, never the
+      // batch's own
+      all.dropDuplicates("new_id", "corpus_id")
+        .join(prior.select(col("vec_id").as("corpus_id")), Seq("corpus_id"),
+          "left_semi")
+        .join(b.select(col("vec_id").as("corpus_id")), Seq("corpus_id"),
+          "left_anti")
+    }
 
   /** Fold the delta partitions into the bucketed base and drop them,
     * restoring the exchange-free probe. Rebuilds from the admitted-
@@ -185,13 +161,7 @@ object VecStream {
     * the snapshot are deleted (the [[DocStream.compact]] rule); a batch
     * admitted mid-compact keeps its delta until the next compact.
     */
-  def compact(spark: SparkSession, st: AnnState): Unit = {
-    val snapshot = BatchStore.listBatchIds(spark, st.vecsPath)
-    if (snapshot.isEmpty) return
-    val vecs = spark.read
-      .parquet(snapshot.map(id => s"${st.vecsPath}/batch=$id"): _*)
-      .select(col("vec_id"), col("embedding"))
-    writeIndex(vecs, st.indexTable, st.nPlanes, st.nBuckets)
-    BatchStore.deleteBatches(spark, deltaDir(st), snapshot)
-  }
+  def compact(spark: SparkSession, st: AnnState): Unit =
+    BatchStore.compact(spark, st.vecsPath, deltaDir(st), "vec_id", "embedding")(
+      writeIndex(_, st.indexTable, st.nPlanes, st.nBuckets))
 }

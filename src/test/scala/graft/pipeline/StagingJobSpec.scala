@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 /** Staging loads its tables concurrently under the caller's job group,
-  * and rejects a CSV whose header lacks a required column.
+  * reads CSV columns by header name, and rejects a CSV whose header lacks
+  * a required column or whose part files disagree on the header.
   */
 class StagingJobSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -107,5 +108,42 @@ class StagingJobSpec extends AnyFunSuite {
     val piped = intercept[IllegalArgumentException](
       Pipeline.run(spark, s"$dir/csv", s"$dir/out", LocalDate.of(2025, 7, 15)))
     assert(piped.getMessage.contains("'customers'"), piped.getMessage)
+  }
+
+  test("a reordered header with an extra column stages row-for-row equal to the canonical file; mixed part headers fail") {
+    val dir = fixture()
+    val csv = s"$dir/csv"
+    val shuffled = s"$dir/shuffled"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    Schemas.staging.keys.foreach { t =>
+      // the canonical file's values, untouched, under a reversed header
+      // plus a column staging does not know
+      val raw = spark.read.option("header", "true").csv(s"$csv/$t.csv")
+      raw.select(raw.columns.reverse.map(raw.col): _*)
+        .withColumn("extra_note", org.apache.spark.sql.functions.lit("x,y"))
+        .coalesce(1).write.option("header", "true").csv(s"$shuffled/$t.csv")
+      val canonical = StagingJob.loadTable(spark, csv, s"$dir/out_a", t)
+      val reordered = StagingJob.loadTable(spark, shuffled, s"$dir/out_b", t)
+      assert(reordered.schema == canonical.schema, t)
+      assert(rows(reordered) == rows(canonical), t)
+    }
+    // an optional column the header lacks stages as a typed null
+    val raw = spark.read.option("header", "true").csv(s"$csv/products.csv")
+    raw.drop("description").coalesce(1).write.option("header", "true")
+      .csv(s"$dir/narrow/products.csv")
+    val narrow = StagingJob.loadTable(spark, s"$dir/narrow", s"$dir/out_c",
+      "products")
+    assert(narrow.schema == Schemas.staging("products"))
+    assert(narrow.count() > 0 &&
+      narrow.filter(narrow("description").isNotNull).count() == 0)
+    // part files that disagree on the header are rejected, naming the table
+    spark.read.option("header", "true").csv(s"$shuffled/orders.csv")
+      .coalesce(1).write.mode("append").option("header", "true")
+      .csv(s"$csv/orders.csv")
+    val mixed = intercept[IllegalArgumentException](
+      StagingJob.loadTable(spark, csv, s"$dir/out_d", "orders"))
+    assert(mixed.getMessage.contains("'orders'") &&
+      mixed.getMessage.contains("different headers"), mixed.getMessage)
   }
 }

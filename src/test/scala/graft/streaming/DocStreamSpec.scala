@@ -238,23 +238,31 @@ class DocStreamSpec extends AnyFunSuite {
     // writer dies in that window (deltas already consumed by an earlier
     // compact), the next batch must rebuild the base from the docs
     // store — not create an empty one and silently lose every
-    // compacted probe row.
+    // compacted probe row. Checked for the band and the span stream.
+    import graft.operators.SpanIndex
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text").cache()
-    val base = Files.createTempDirectory("graft_docstream_crash").toString
-    val st = DocStream.DedupState(
-      indexTable = "docstream_crash_idx",
-      docsPath = s"$base/admitted",
-      matchesPath = s"$base/matches")
-    spark.sql(s"DROP TABLE IF EXISTS `${st.indexTable}`")
     val b0 = docs.filter($"doc_id" % 3 === 0)
     val b1 = docs.filter($"doc_id" % 3 === 1)
     val b2 = docs.filter($"doc_id" % 3 === 2)
-    DocStream.processBatch(b0, 0L, st)
-    DocStream.processBatch(b1, 1L, st)
-    DocStream.compact(spark, st) // deltas folded and deleted
-    spark.sql(s"DROP TABLE `${st.indexTable}`") // simulated mid-compact crash
-    DocStream.processBatch(b2, 2L, st)
+    def crashThenIngest(table: String,
+        process: (org.apache.spark.sql.DataFrame, Long) => Unit,
+        compact: () => Unit): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS `$table`")
+      process(b0, 0L)
+      process(b1, 1L)
+      compact() // deltas folded and deleted
+      spark.sql(s"DROP TABLE `$table`") // simulated mid-compact crash
+      process(b2, 2L)
+    }
+    val base = Files.createTempDirectory("graft_docstream_crash").toString
+
+    val st = DocStream.DedupState(
+      indexTable = "docstream_crash_idx",
+      docsPath = s"$base/band/admitted",
+      matchesPath = s"$base/band/matches")
+    crashThenIngest(st.indexTable, DocStream.processBatch(_, _, st),
+      () => DocStream.compact(spark, st))
     // the final drop's matches are exactly q71's batch split — only
     // possible if the probe saw the FULL b0 ∪ b1 corpus again
     val streamed = spark.read.parquet(st.matchesPath)
@@ -266,7 +274,28 @@ class DocStreamSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
     assert(streamed == batch,
       s"lost compacted state: ${streamed.size} vs ${batch.size} matches")
-    spark.sql(s"DROP TABLE IF EXISTS `${st.indexTable}`")
+
+    val sp = DocStream.SpanState(
+      indexTable = "spanstream_crash_idx",
+      docsPath = s"$base/span/admitted",
+      flagsPath = s"$base/span/flags")
+    crashThenIngest(sp.indexTable, DocStream.processSpanBatch(_, _, sp),
+      () => DocStream.compactSpans(spark, sp))
+    // the final drop's flags are exactly the incremental SpanIndex
+    // dataflow against a fresh b0 ∪ b1 index
+    val flags = spark.read.parquet(sp.flagsPath)
+      .where($"batch" === 2)
+      .select($"doc_id", $"n_tokens", $"is_exact_dup", $"dup_of")
+      .collect().map(_.toSeq).toSet
+    val corpus = b0.unionByName(b1)
+    SpanIndex.write(corpus, "spanstream_crash_ref_idx", 8)
+    val ref = SpanIndex.flagIncremental(spark, "spanstream_crash_ref_idx",
+      corpus, b2).collect().map(_.toSeq).toSet
+    assert(ref.exists(_(2) == 1), "fixture should flag real span dups")
+    assert(flags == ref, s"lost compacted span state: " +
+      s"${flags.count(_(2) == 1)} vs ${ref.count(_(2) == 1)} flagged")
+    Seq(st.indexTable, sp.indexTable, "spanstream_crash_ref_idx").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     docs.unpersist()
   }
 

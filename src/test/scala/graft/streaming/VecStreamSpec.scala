@@ -119,6 +119,16 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // in particular: no self-matches from probing state that already
     // contains the replayed batch
     assert(!matchesAfter.exists(r => r.head == r(1)))
+    // EARLIER-batch replay against LATER state: after batch 2, batch 0
+    // fires again. It may only see vectors admitted before it (none), so
+    // the matches stay value-identical and never point at a vector
+    // admitted later
+    VecStream.processBatch(emb.filter($"vec_id" % 3 === 2), 2L, st)
+    val matchesAt2 = spark.read.parquet(st.matchesPath)
+      .collect().map(_.toSeq).toSet
+    VecStream.processBatch(d0, 0L, st)
+    assert(spark.read.parquet(st.matchesPath).collect().map(_.toSeq).toSet ==
+      matchesAt2, "earlier-batch replay against later state changed matches")
     spark.sql(s"DROP TABLE IF EXISTS `${st.indexTable}`")
     emb.unpersist()
   }
