@@ -212,9 +212,7 @@ object Bench {
           } else t1
         counted(n) = counts
         if (counts >= 0) done += counts
-        if (unpersistAfterQuery)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+        if (unpersistAfterQuery) Sessions.unpersistAll(spark)
       }
 
       // end-of-run tail probe: trivial sentinels re-timed after the

@@ -48,4 +48,14 @@ object Sessions {
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
+
+  /** Drop the blocks of every persisted RDD (cache entries and
+    * localCheckpoints alike) without waiting for the block removal. A
+    * multi-query session calls this between queries, outside any timed
+    * region: otherwise each query's checkpoint blocks pile up in executor
+    * storage until a GC happens to feed the ContextCleaner.
+    */
+  def unpersistAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
 }

@@ -67,8 +67,7 @@ object Verify {
       // (measured on Bench: gc 11.7 s vs 2.2 s over one pass, warm
       // per-query geomean 1.33× slower without it). Outside any
       // contract surface — Verify is a correctness dump, not a timing.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Sessions.unpersistAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,7 +2,7 @@ package graft.corpus
 
 import graft.functions.TextFunctions
 import graft.functions.UnicodeNorm
-import graft.operators.{CanonicalMap, DataSplit, DedupCluster, DedupIndex, DedupQueries, SpanIndex}
+import graft.operators.{CanonicalMap, DataSplit, DedupCluster, DedupIndex, DedupQueries, Materialize, SpanIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,6 +76,36 @@ object CorpusPrep {
   /** One row per pipeline stage: rows surviving after it ran. */
   final case class StageCount(stage: String, rows: Long)
 
+  /** The stage chain [[run]] and [[ingestBatch]] compose. Each stage is
+    * materialized once by [[Materialize]], its row count observed in that
+    * same job, and the previous stage's checkpoint is released right
+    * after: the new checkpoint cut the lineage, so nothing reads the old
+    * one any more. A stage that returns the previous stage's frame itself
+    * (a disabled gate or mix) passes straight through with the previous
+    * count; it runs no job and releases nothing. The last stage is the
+    * caller's result, so a run leaves nothing in the CacheManager and
+    * pins only that checkpoint, whose blocks the ContextCleaner frees
+    * once the caller drops it.
+    */
+  private final class Stages {
+    private val built = Seq.newBuilder[StageCount]
+    private var prev: DataFrame = null
+    private var prevRows = 0L
+
+    def apply(name: String, df: DataFrame): DataFrame = {
+      if (!(df eq prev)) {
+        val (ck, m) = Materialize(df, count(lit(1)))
+        if (prev != null) Materialize.release(prev)
+        prev = ck
+        prevRows = m.getLong(0)
+      }
+      built += StageCount(name, prevRows)
+      prev
+    }
+
+    def counts: Seq[StageCount] = built.result()
+  }
+
   /** Run the full preparation pipeline.
     *
     * @param docs  corpus with (doc_id, text, source) columns
@@ -87,21 +117,7 @@ object CorpusPrep {
     */
   def run(docs: DataFrame, eval: Option[DataFrame],
       cfg: CorpusPrepConfig = CorpusPrepConfig()): (DataFrame, Seq[StageCount]) = {
-    val counts = Seq.newBuilder[StageCount]
-    // Each stage caches for the count + the next stage's build, then the
-    // PREVIOUS stage's cache is dropped: once stage N is materialized
-    // its lineage no longer needs N−1's blocks. The final result is
-    // handed off as a localCheckpoint (lineage cut, blocks freed by the
-    // ContextCleaner when the caller drops the plan) so a run pins
-    // nothing in the CacheManager for the session's lifetime.
-    var prev: DataFrame = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cached = df.cache()
-      counts += StageCount(name, cached.count())
-      if (prev != null) prev.unpersist()
-      prev = cached
-      cached
-    }
+    val stage = new Stages
 
     val input = stage("input", docs)
 
@@ -220,9 +236,7 @@ object CorpusPrep {
           ((sum(col("n_tok")).over(w) - col("n_tok")) / cfg.packBudget)
             .cast("long")))
 
-    val out = packed.localCheckpoint()
-    packed.unpersist()
-    (out, counts.result())
+    (packed, stage.counts)
   }
 
   /** Incremental ingest — [[run]]'s O(batch) production counterpart:
@@ -268,15 +282,7 @@ object CorpusPrep {
       bandIndexTable: String, spanIndexTable: String, mapTable: String,
       cfg: CorpusPrepConfig = CorpusPrepConfig()): (DataFrame, Seq[StageCount]) = {
     val spark = batch.sparkSession
-    val counts = Seq.newBuilder[StageCount]
-    var prev: DataFrame = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cached = df.cache()
-      counts += StageCount(name, cached.count())
-      if (prev != null) prev.unpersist()
-      prev = cached
-      cached
-    }
+    val stage = new Stages
 
     val input = stage("input", batch)
     val normalized = stage("normalize",
@@ -330,8 +336,6 @@ object CorpusPrep {
           .select(col("doc_id"), col("split")),
         Seq("doc_id")))
 
-    val out = admitted.localCheckpoint()
-    admitted.unpersist()
-    (out, counts.result())
+    (admitted, stage.counts)
   }
 }

@@ -31,39 +31,40 @@ object DedupCluster {
     // no distinct(): duplicate edges are harmless under the min
     // aggregation (idempotent), and deduping them would cost an extra
     // shuffle per resolve
-    val edges0 = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .cache()
+    val (edges0, m0) = Materialize(
+      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))),
+      count(lit(1)))
     // size the iteration's parallelism to the edge set: dup graphs are
     // tiny relative to the corpus (most docs are in no pair), and a
     // fixed 32-partition shuffle per iteration would be pure scheduling
     // overhead; at 100 TB the same rule lands on many partitions
-    val nEdges = edges0.count()
+    val nEdges = m0.getLong(0)
     // a clean corpus (zero near-dup pairs at the caller's threshold) is a
     // legal input: resolve to the empty mapping instead of entering the
     // loop, where an empty `labels` would make sum(label) a null DECIMAL
     if (nEdges == 0L) {
-      edges0.unpersist()
+      Materialize.release(edges0)
       return pairs.select(col("a_id").as("id"), col("a_id").as("canonical_id"))
         .limit(0)
     }
     val parts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions,
       (nEdges / 500000L).toInt))
-    val edges = edges0.repartition(parts, col("src")).cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .cache()
+    val (edges, _) = Materialize(edges0.repartition(parts, col("src")))
+    Materialize.release(edges0)
     // Fixed-point detection by the label-sum invariant: labels only
     // ever DECREASE elementwise (min propagation), so the total is
     // strictly monotone until convergence — comparing sums is an exact
-    // convergence test and costs one narrow aggregation over the cached
-    // frame instead of a next-vs-previous join per iteration. DECIMAL
+    // convergence test, observed in the job that materializes each
+    // round instead of a next-vs-previous join per iteration. DECIMAL
     // accumulation so the test can't overflow at any id magnitude.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head()
-        .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
+    val labelSum = sum(col("label").cast("decimal(38,0)"))
+    val (labels0, m) = Materialize(
+      edges.select(col("src").as("id")).distinct().withColumn("label", col("id")),
+      labelSum)
+    var labels = labels0
+    var prevSum = m.getDecimal(0)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -71,16 +72,16 @@ object DedupCluster {
       val neighborLabels = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), col("label"))
-      val next = labels.unionByName(neighborLabels)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .cache()
-      val nextSum = labelSum(next)
-      labels.unpersist()
+      val (next, mNext) = Materialize(labels.unionByName(neighborLabels)
+        .groupBy(col("id")).agg(min(col("label")).as("label")), labelSum)
+      Materialize.release(labels)
       labels = next
+      val nextSum = mNext.getDecimal(0)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
     }
+    Materialize.release(edges)
     // One stderr line per resolve: iteration count and graph shape. This
     // is the attribution instrument for bench drift — label propagation
     // costs O(iters) joins, and iters = max component diameter, a pure
@@ -94,16 +95,11 @@ object DedupCluster {
     System.err.println(s"[dedup-cluster] edges=$nEdges " +
       s"nodes=${stats.getLong(0)} clusters=${stats.getLong(1)} " +
       s"parts=$parts iters=$iter converged=$converged")
-    edges.unpersist()
-    edges0.unpersist()
-    // hand the result off as a checkpoint: the iteration's lineage (and
-    // its last cached stage) is cut, the cache entry released, and the
-    // checkpoint blocks are freed by the ContextCleaner once the caller
-    // drops the plan — no session-lifetime CacheManager pin
-    val out = labels.withColumnRenamed("label", "canonical_id")
-      .localCheckpoint()
-    labels.unpersist()
-    out
+    // the last round's checkpoint IS the result: every earlier step was
+    // released as soon as its successor existed, nothing sits in the
+    // CacheManager, and this one's blocks are freed by the ContextCleaner
+    // once the caller drops the plan
+    labels.withColumnRenamed("label", "canonical_id")
   }
 
   /** Keep-one-per-cluster view: every doc with its keeper; docs in no

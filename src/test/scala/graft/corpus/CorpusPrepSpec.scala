@@ -184,6 +184,92 @@ class CorpusPrepSpec extends AnyFunSuite {
     // same oracle twice)
   }
 
+  test("each stage runs its plan once: nfc_normalize in one execution per call, nothing left cached") {
+    import graft.functions.NfcNormalize
+    import graft.operators.{CanonicalMap, DedupIndex, SpanIndex}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // With the default config the learned gate and the mix pass their
+    // input through. A stage chain that drops the previous stage's cache
+    // after such a pass-through (it is the same frame) makes exact_dedup
+    // and pack re-plan from the raw input, normalization included.
+    val docs = Tables.load(spark, sfDir, "documents")
+    val eval_ = docs.filter($"doc_id" % 20 === 0).select($"doc_id", $"text")
+    val corpus = docs.filter($"doc_id" < 250).select($"doc_id", $"text", $"source")
+    val batch = docs.filter($"doc_id" >= 250).select($"doc_id", $"text", $"source")
+    val (bandT, spanT, mapT) = ("cp_once_band", "cp_once_span", "cp_once_map")
+    DedupIndex.write(corpus, bandT, nBuckets = 8)
+    SpanIndex.write(corpus, spanT, nBuckets = 8)
+    CanonicalMap.write(corpus, mapT, nBuckets = 8)
+    spark.catalog.clearCache()
+
+    // Does an execution evaluate nfc_normalize? Walk its final plan and
+    // AQE query stages. A cached relation's plan runs in the execution
+    // that first reads it (that read builds the buffers); every later
+    // read only scans them, so it is walked once.
+    val helper = new AdaptiveSparkPlanHelper {}
+    val built = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def evaluatesNfc(plan: SparkPlan): Boolean = {
+      var hit = false
+      helper.foreach(plan) {
+        case s: InMemoryTableScanExec =>
+          if (built.add(s.relation.cacheBuilder))
+            hit |= evaluatesNfc(s.relation.cacheBuilder.cachedPlan)
+        case p =>
+          hit |= p.expressions.exists(_.exists(_.isInstanceOf[NfcNormalize]))
+      }
+      hit
+    }
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener events arrive asynchronously, in order: a sentinel query
+    // after the call marks the point where all of the call's are in
+    val sentinel = "cp_once_sentinel"
+    def nfcExecutions[T](call: => T): (T, Int) = {
+      executions.clear()
+      spark.listenerManager.register(listener)
+      val r = try {
+        val r = call
+        spark.range(1).toDF(sentinel).collect()
+        val deadline = System.nanoTime() + 120L * 1000000000L
+        while (!executions.asScala.exists(_.analyzed.output.exists(_.name == sentinel))) {
+          assert(System.nanoTime() < deadline, "sentinel execution never reported")
+          Thread.sleep(20)
+        }
+        r
+      } finally spark.listenerManager.unregister(listener)
+      (r, executions.asScala.count(qe => evaluatesNfc(qe.executedPlan)))
+    }
+
+    val ((_, runCounts), runNfc) = nfcExecutions(CorpusPrep.run(docs, Some(eval_)))
+    assert(spark.sharedState.cacheManager.isEmpty, "run left a cache entry")
+    val ((_, ingestCounts), ingestNfc) =
+      nfcExecutions(CorpusPrep.ingestBatch(corpus, batch, bandT, spanT, mapT))
+    assert(spark.sharedState.cacheManager.isEmpty, "ingestBatch left a cache entry")
+    Seq(bandT, spanT, mapT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+
+    // stage accounting on these inputs; the pass-through stages
+    // (classifier_sample, mix, ingest's classifier_sample) repeat the
+    // previous stage's count
+    assert(runCounts.map(c => c.stage -> c.rows) == Seq("input" -> 500L,
+      "normalize" -> 500L, "quality_gate" -> 482L, "classifier_sample" -> 482L,
+      "exact_dedup" -> 482L, "near_dedup" -> 460L, "span_dedup" -> 460L,
+      "decontaminate" -> 437L, "mix" -> 437L, "pack" -> 437L))
+    assert(ingestCounts.map(c => c.stage -> c.rows) == Seq("input" -> 250L,
+      "normalize" -> 250L, "quality_gate" -> 243L, "classifier_sample" -> 243L,
+      "exact_dedup" -> 243L, "near_dedup" -> 234L, "span_dedup" -> 234L,
+      "split" -> 234L))
+    assert(runNfc == 1, s"run evaluated nfc_normalize in $runNfc executions")
+    assert(ingestNfc == 1, s"ingestBatch evaluated nfc_normalize in $ingestNfc executions")
+  }
+
   test("incremental ingest: one batch through all three persisted indices, combined invariants") {
     import graft.operators.{CanonicalMap, DedupIndex, SpanIndex}
     // The individually-pinned pieces (DedupIndexSpec, SpanIndexSpec,
