@@ -97,6 +97,5 @@ object Cols {
       .cast(DecimalType(12, 2))
   }
   def dbl(c: Column): Column = c.cast(DoubleType)
-  def i32(c: Column): Column = c.cast(IntegerType)
   def i64(c: Column): Column = c.cast(LongType)
 }

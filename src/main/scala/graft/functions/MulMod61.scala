@@ -148,13 +148,4 @@ object MulMod61 {
     ha.take(k).mkString("[", "::HUGEINT, ", "::HUGEINT]")
   def sqlHbList(k: Int): String =
     hb.take(k).mkString("[", "::HUGEINT, ", "::HUGEINT]")
-
-  /** SQL: MinHash signature (HUGEINT list, length k) of a HUGEINT-list
-    * `phs` of per-shingle polyHash61 values: position i holds
-    * `min over x of (ha[i]·x + hb[i]) mod p`.
-    */
-  def sqlSig(phsExpr: String, k: Int): String =
-    s"""list_transform(range(0, $k), i ->
-       |  list_aggregate(list_transform($phsExpr,
-       |    x -> ((${sqlHaList(k)})[i+1] * x + (${sqlHbList(k)})[i+1]) % $P), 'min'))""".stripMargin
 }

@@ -19,11 +19,6 @@ object TextFunctions {
 
   def charCount(text: Column): Column = length(text)
 
-  /** Mean token length (whitespace removed / token count), double. */
-  def avgTokenLen(text: Column): Column =
-    length(regexp_replace(trim(text), "\\s+", "")).cast("double") /
-      size(tokens(text))
-
   /** Share of characters that are not alphanumeric/whitespace. The
     * divisor is floored at 1 so a zero-length text scores 0 (numerator
     * is 0 too) instead of throwing ANSI DIVIDE_BY_ZERO — inert on any

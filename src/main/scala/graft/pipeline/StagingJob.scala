@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (reference DAG 1, `staging_dag.py`). The reference's 1000-row pandas
   * chunking (S1) is Spark's native partitioned read; its per-table
   * cleaning (P1-P5) becomes column expressions; `to_sql replace/append`
-  * (S5/S6) becomes a single atomic overwrite. The reference's four
+  * (S5/S6) becomes a delete-then-write overwrite, not atomic. The four
   * parallel loads become one concurrent submission of all seven (`run`).
   */
 object StagingJob {
@@ -92,7 +92,7 @@ object StagingJob {
     case _ => df
   }
 
-  /** S5: full-replace semantics, atomically. */
+  /** S5: full-replace semantics, by delete-then-write: not atomic. */
   def loadTable(spark: SparkSession, csvDir: String, outDir: String,
       table: String): DataFrame =
     Pipeline.persist(clean(table, readCsv(spark, csvDir, table)),

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.time.LocalDate
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,6 +111,45 @@ class PipelineSpec extends AnyFunSuite {
     val es = result.executiveSummary.collect().head
     assert(es.getAs[Long]("total_customers") == result.customerMetrics.count())
     assert(es.getAs[Long]("total_products") == result.productMetrics.count())
+  }
+
+  test("closed-form executive summary == the literal triple cross join, edge cases included") {
+    // the reference's view as written (analytics_dag.py:339-353)
+    def crossJoined(cm: DataFrame, pm: DataFrame, ds: DataFrame): DataFrame =
+      cm.select($"customer_key", $"total_spent", $"churn_risk_score")
+        .crossJoin(pm.select($"product_key", $"total_revenue"))
+        .crossJoin(ds.select($"sales_date", $"total_revenue".as("daily_revenue")))
+        .agg(
+          countDistinct($"customer_key").as("total_customers"),
+          countDistinct($"product_key").as("total_products"),
+          countDistinct($"sales_date").as("total_sales_days"),
+          sum($"daily_revenue").as("inflated_total_revenue"),
+          countDistinct(when($"churn_risk_score" < lit(0.5),
+            $"customer_key")).as("active_customers"))
+    def types(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    val (cm, pm, ds) =
+      (result.customerMetrics, result.productMetrics, result.dailySales)
+    val nullRevenue = ds.withColumn("total_revenue",
+      lit(null).cast(ds.schema("total_revenue").dataType))
+    Seq("fixture" -> (cm, pm, ds), "no customers" -> (cm.limit(0), pm, ds),
+      "no products" -> (cm, pm.limit(0), ds), "no days" -> (cm, pm, ds.limit(0)),
+      "all-null daily revenue" -> (cm, pm, nullRevenue)).foreach {
+      case (label, (c, p, d)) =>
+        val got = AnalyticsJob.executiveSummary(c, p, d)
+        val want = crossJoined(c, p, d)
+        assert(types(got) == types(want), label)
+        assert(got.collect().toSeq == want.collect().toSeq, label)
+    }
+    val fixture = AnalyticsJob.executiveSummary(cm, pm, ds).head()
+    assert(fixture.getAs[java.math.BigDecimal]("inflated_total_revenue") != null)
+    assert(fixture.getAs[Long]("active_customers") > 0)
+    // 2 × 2 × 5e35 overflows DECIMAL(38,2) in both forms under ANSI
+    val huge = ds.limit(1).withColumn("total_revenue",
+      lit("5" + "0" * 35).cast("decimal(38,2)"))
+    Seq(AnalyticsJob.executiveSummary _, crossJoined _).foreach { f =>
+      val e = intercept[Exception](f(cm.limit(2), pm.limit(2), huge).collect())
+      assert(e.getMessage.contains("SQLSTATE: 22003"), e.getMessage) // out of range
+    }
   }
 
   test("views: top_products ranked and limited; acquisition shares sum to 100") {
