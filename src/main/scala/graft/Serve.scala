@@ -10,6 +10,7 @@ import java.time.LocalDate
   *
   * Usage: `runMain graft.Serve [csvDir] [outDir] [--once] [--connect]`
   *   - no csvDir  → generate the deterministic CSV fixtures first
+  *   - no outDir  → work in a [[TempDirs]] directory, deleted at exit
   *   - `--once`   → smoke mode: query every view once, print row counts,
   *                  exit 0 (what the spec and the driver can run)
   *   - `--connect`→ additionally start the Spark Connect gRPC service
@@ -113,8 +114,7 @@ object Serve {
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    val workDir = paths.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_serve").toString)
+    val workDir = paths.lift(1).getOrElse(TempDirs("graft_serve"))
     val csvDir = paths.headOption.getOrElse {
       val d = s"$workDir/csv"
       pipeline.DataGen.writeAll(spark, d)

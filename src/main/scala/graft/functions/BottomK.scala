@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** Mergeable bottom-k quantile sketch over (row-hash, value) pairs: keep
@@ -61,80 +60,20 @@ import org.apache.spark.sql.functions.udaf
   */
 object BottomK {
 
-  class Agg(k: Int) extends Aggregator[(Long, Long), Array[Long], Array[Long]] {
-    require(k > 0)
-
-    // buffer = flattened sorted pairs [h0,v0, h1,v1, ...], ≤ k pairs
-
-    /** First pair index whose (h,v) sorts strictly after the probe —
-      * i.e. insertion keeps duplicates and lands after equal pairs.
-      */
-    private def insertPos(buf: Array[Long], nPairs: Int, h: Long, v: Long): Int = {
-      var lo = 0
-      var hi = nPairs
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        val bh = buf(2 * mid)
-        val bv = buf(2 * mid + 1)
-        if (bh < h || (bh == h && bv <= v)) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-
-    override def zero: Array[Long] = Array.emptyLongArray
+  /** Rows are (hash, value) pairs over the shared bottom-k kernel
+    * ([[SketchAggs.BottomRows]], width 2).
+    */
+  class Agg(k: Int) extends SketchAggs.BottomRows[(Long, Long), Array[Long]](k, 2) {
 
     override def reduce(buf: Array[Long], x: (Long, Long)): Array[Long] = {
-      val h = x._1
-      val v = x._2
       // hashes live in [0, 2^61−1): a negative hash is the caller's
       // null sentinel (nullable key/value coalesced to -1) — skipped,
       // so NULLs neither crash the non-nullable UDAF path nor enter
       // the sample
-      if (h < 0) return buf
-      val n = buf.length / 2
-      val pos = insertPos(buf, n, h, v)
-      if (n < k) {
-        // growth phase: at most k allocations per partial, ever
-        val out = new Array[Long](buf.length + 2)
-        System.arraycopy(buf, 0, out, 0, 2 * pos)
-        out(2 * pos) = h
-        out(2 * pos + 1) = v
-        System.arraycopy(buf, 2 * pos, out, 2 * pos + 2, buf.length - 2 * pos)
-        out
-      } else if (pos < k) {
-        // displaces the current maximum pair — steady state, shift IN
-        // PLACE (the KmvSketch zero-allocation discipline; reduce owns
-        // its buffer and the growth path never returns the shared
-        // empty-array zero once non-empty)
-        System.arraycopy(buf, 2 * pos, buf, 2 * pos + 2, 2 * (k - pos - 1))
-        buf(2 * pos) = h
-        buf(2 * pos + 1) = v
-        buf
-      } else buf
-    }
-
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      // merge two sorted pair arrays, keep the k smallest pairs
-      // (duplicates kept — multiset semantics)
-      val na = a.length / 2
-      val nb = b.length / 2
-      val outN = math.min(na + nb, k)
-      val out = new Array[Long](2 * outN)
-      var i = 0
-      var j = 0
-      var o = 0
-      while (o < outN) {
-        val takeA = j >= nb || (i < na &&
-          (a(2 * i) < b(2 * j) ||
-            (a(2 * i) == b(2 * j) && a(2 * i + 1) <= b(2 * j + 1))))
-        if (takeA) {
-          out(2 * o) = a(2 * i); out(2 * o + 1) = a(2 * i + 1); i += 1
-        } else {
-          out(2 * o) = b(2 * j); out(2 * o + 1) = b(2 * j + 1); j += 1
-        }
-        o += 1
-      }
-      out
+      if (x._1 < 0) return buf
+      row(0) = x._1
+      row(1) = x._2
+      insertRow(buf)
     }
 
     /** Emit the kept VALUES sorted ascending — the sample's order
@@ -150,8 +89,7 @@ object BottomK {
       vals
     }
 
-    override def bufferEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
+    override def outputEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
   }
 
   /** Column function: `bottomK(hashCol, valueCol, k)` usable in

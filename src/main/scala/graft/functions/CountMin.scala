@@ -96,8 +96,8 @@ object CountMin {
     }
 
     override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
+    override def bufferEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
+    override def outputEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
   }
 
   /** Column function: `countMin(hashCol)` usable in `agg(...)` — yields

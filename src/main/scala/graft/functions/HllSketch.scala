@@ -115,15 +115,22 @@ object HllSketch {
       buf
     }
 
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
-      a
-    }
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = maxInto(a, b)
 
     override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
+    override def bufferEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
+    override def outputEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
+  }
+
+  /** The register merge: element-wise max of `b` into `a`, over their
+    * common length — a register array shorter than m (the empty zero)
+    * folds as all-empty registers.
+    */
+  private def maxInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
+    a
   }
 
   /** Column function: `hll(hashCol)` usable in `agg(...)` — yields the
@@ -133,34 +140,16 @@ object HllSketch {
   def hll(hash: Column): Column =
     udaf(new Agg, Encoders.scalaLong).apply(hash)
 
-  /** Second-level aggregator: fold ALREADY-BUILT register arrays into
-    * one by element-wise max — `union of sketches == sketch of union`,
-    * the mergeability that makes HLL a rollup primitive (merge per-day /
-    * per-source sketches into a global one WITHOUT revisiting rows;
-    * q142 proves the equality under the oracle). Input arrays shorter
-    * than m (the empty zero) are treated as all-empty registers.
-    */
-  class MergeAgg extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    override def zero: Array[Long] = new Array[Long](M)
-    override def reduce(buf: Array[Long], regs: Array[Long]): Array[Long] = {
-      if (regs != null) {
-        var i = 0
-        val n = math.min(buf.length, regs.length)
-        while (i < n) { if (regs(i) > buf(i)) buf(i) = regs(i); i += 1 }
-      }
-      buf
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = reduce(a, b)
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
-  }
-
   /** Column function: `hllMerge(regsCol)` — the rollup fold over a
-    * column of register arrays produced by [[hll]].
+    * column of register arrays produced by [[hll]]: element-wise max,
+    * `union of sketches == sketch of union`, the mergeability that makes
+    * HLL a rollup primitive (merge per-day / per-source sketches into a
+    * global one WITHOUT revisiting rows; q142 proves the equality under
+    * the oracle). NULL rows are skipped, and arrays shorter than m (the
+    * empty zero) fold as all-empty registers.
     */
   def hllMerge(regs: Column): Column =
-    udaf(new MergeAgg, KmvSketch.arrEnc).apply(regs)
+    SketchAggs.mergeAgg(regs, () => new Array[Long](M), maxInto)
 
   /** Spark-SQL fragment: the exact-integer scaled harmonic sum
     * Σ 2^(WBits+1−M[j]) over a register-array column named `c` — every

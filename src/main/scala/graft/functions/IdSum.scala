@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.sum
   * accumulated EXACTLY (Spark: decimal(38,0); DuckDB: HUGEINT) and the
   * reduction keeping the output a plain long.
   *
-  * Why this exists (caught by AdversarialIdSpec, the thirteenth
+  * Why this exists (caught by TotalitySweep row `adv_id`, the thirteenth
   * sweep): several samplers/splitters pin their exact kept/member SET
   * against the oracle via a `sum(doc_id)` checksum. A plain long sum
   * is NOT total at the claimed scale — real ingest ids are snowflake

@@ -67,53 +67,43 @@ object KmvSketch {
       }
     }
 
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      // merge two sorted distinct arrays, keep the k smallest distinct
-      val out = new Array[Long](math.min(a.length + b.length, k))
-      var i = 0; var j = 0; var o = 0
-      while (o < out.length && (i < a.length || j < b.length)) {
-        val v =
-          if (j >= b.length || (i < a.length && a(i) <= b(j))) { val v = a(i); i += 1; v }
-          else { val v = b(j); j += 1; v }
-        if (o == 0 || out(o - 1) != v) { out(o) = v; o += 1 }
-      }
-      if (o == out.length) out else java.util.Arrays.copyOf(out, o)
+    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = union(a, b, k)
+
+    override def finish(buf: Array[Long]): Array[Long] = buf
+    override def bufferEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
+    override def outputEncoder: Encoder[Array[Long]] = SketchAggs.LongArrayEnc
+  }
+
+  /** Merge two sorted distinct arrays, keeping the k smallest distinct. */
+  private def union(a: Array[Long], b: Array[Long], k: Int): Array[Long] = {
+    val out = new Array[Long](math.min(a.length + b.length, k))
+    var i = 0; var j = 0; var o = 0
+    while (o < out.length && (i < a.length || j < b.length)) {
+      val v =
+        if (j >= b.length || (i < a.length && a(i) <= b(j))) { val v = a(i); i += 1; v }
+        else { val v = b(j); j += 1; v }
+      if (o == 0 || out(o - 1) != v) { out(o) = v; o += 1 }
     }
-
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = arrEnc
+    if (o == out.length) out else java.util.Arrays.copyOf(out, o)
   }
 
-  /** Merge aggregator over ALREADY-BUILT kmv sketch arrays — folds
-    * them with the same k-smallest-distinct merge the row aggregator
-    * uses (union-of-sketches; the k-min synopsis is closed under
-    * union, Beyer et al. SIGMOD'07 §5), so rolling up persisted
-    * per-day/per-scope sketches consumes O(rows·k) state and never
-    * touches raw keys — [[HllSketch.MergeAgg]]'s shape for the KMV
-    * family. State is a pure set-minimum fold: merge-tree- and
-    * replay-independent, like everything else under the oracle gate.
+  /** Merge aggregator over ALREADY-BUILT kmv sketch arrays — the shared
+    * [[SketchAggs.MergeAgg]] fold with the same k-smallest-distinct merge
+    * the row aggregator uses (union-of-sketches; the k-min synopsis is
+    * closed under union, Beyer et al. SIGMOD'07 §5), so rolling up
+    * persisted per-day/per-scope sketches consumes O(rows·k) state and
+    * never touches raw keys. State is a pure set-minimum fold:
+    * merge-tree- and replay-independent, like everything else under the
+    * oracle gate.
     */
-  class MergeAgg(k: Int) extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    private val inner = new Agg(k)
-    override def zero: Array[Long] = Array.emptyLongArray
-    override def reduce(buf: Array[Long], sk: Array[Long]): Array[Long] =
-      if (sk == null) buf else inner.merge(buf, sk)
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] =
-      inner.merge(a, b)
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = arrEnc
-    override def outputEncoder: Encoder[Array[Long]] = arrEnc
-  }
+  class MergeAgg(k: Int)
+      extends SketchAggs.MergeAgg(() => Array.emptyLongArray, union(_, _, k))
 
   /** Column function: fold a column of kmv sketch arrays into their
     * union sketch (k smallest distinct hashes across all inputs).
     */
   def kmvMerge(kmv: Column, k: Int): Column =
-    udaf(new MergeAgg(k), arrEnc).apply(kmv)
-
-  val arrEnc: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+    udaf(new MergeAgg(k), SketchAggs.LongArrayEnc).apply(kmv)
 
   /** Column function: `kmvSketch(hashCol, k)` usable in `agg(...)` —
     * yields the sorted `array<long>` of the k smallest distinct hashes.

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
 
 /** Mergeable MinHash set-union aggregate: element-wise minimum over the
   * per-document signatures of a group, yielding the signature of the
@@ -24,42 +22,17 @@ import org.apache.spark.sql.functions.udaf
   */
 object MinHashUnion {
 
-  class Agg(k: Int) extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-
-    override def reduce(buf: Array[Long], sig: Array[Long]): Array[Long] = {
-      if (sig == null) return buf
-      require(sig.length == k,
-        s"signature length ${sig.length} != aggregate k=$k")
+  /** Column function: `minhashUnion(sigCol, k)` usable in `agg(...)` —
+    * the shared [[SketchAggs.MergeAgg]] fold with element-wise minimum.
+    */
+  def minhashUnion(sig: Column, k: Int): Column =
+    SketchAggs.mergeAgg(sig, () => Array.fill(k)(Long.MaxValue), (buf, s) => {
+      require(s.length == k, s"signature length ${s.length} != aggregate k=$k")
       var i = 0
       while (i < k) {
-        if (sig(i) < buf(i)) buf(i) = sig(i)
+        if (s(i) < buf(i)) buf(i) = s(i)
         i += 1
       }
       buf
-    }
-
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < k) {
-        if (b(i) < a(i)) a(i) = b(i)
-        i += 1
-      }
-      a
-    }
-
-    override def finish(buf: Array[Long]): Array[Long] = buf
-    override def bufferEncoder: Encoder[Array[Long]] = MinHashUnion.arrayLongEnc
-    override def outputEncoder: Encoder[Array[Long]] = MinHashUnion.arrayLongEnc
-  }
-
-  /** Typed encoder for the signature arrays (ArrayType(LongType) both as
-    * the aggregation buffer crossing the shuffle and as the column I/O).
-    */
-  val arrayLongEnc: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-
-  /** Column function: `minhashUnion(sigCol, k)` usable in `agg(...)`. */
-  def minhashUnion(sig: Column, k: Int): Column =
-    udaf(new Agg(k), arrayLongEnc).apply(sig)
+    })
 }

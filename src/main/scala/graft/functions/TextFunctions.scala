@@ -24,7 +24,7 @@ object TextFunctions {
     * is 0 too) instead of throwing ANSI DIVIDE_BY_ZERO — inert on any
     * non-empty text, and the definition a filter stack needs: an empty
     * doc must be CLASSIFIED (length gate catches it), never crash the
-    * scoring pass (WhitespaceTextSpec).
+    * scoring pass (TotalitySweep row `whitespace`).
     */
   def punctRatio(text: Column): Column =
     length(regexp_replace(text, "[A-Za-z0-9\\s]", "")).cast("double") /
@@ -92,7 +92,7 @@ object TextFunctions {
     // O(n_tokens × doc_len) per row. Harmless on prose, catastrophic on
     // the degenerate token streams every crawl eventually ingests (a
     // 20k-token uniform doc made this the long pole of a whole
-    // registry sweep — UniformTokenSpec). With the binding, the split
+    // registry sweep — TotalitySweep row `uniform`). With the binding, the split
     // runs once per row and lambda references are O(1) variable reads.
     element_at(
       transform(array(tokens(text)), toks =>

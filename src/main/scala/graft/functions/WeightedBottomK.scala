@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** Mergeable WEIGHTED bottom-k quantile sketch over (key, value, weight)
@@ -47,100 +46,23 @@ import org.apache.spark.sql.functions.udaf
   */
 object WeightedBottomK {
 
+  /** Rows are (key, value, weight) triples over the shared bottom-k
+    * kernel ([[SketchAggs.BottomRows]], width 3).
+    */
   class Agg(k: Int)
-      extends Aggregator[(Long, Long, Long), Array[Long], Array[(Long, Long)]] {
-    require(k > 0)
-
-    // buffer = flattened sorted triples [k0,v0,w0, k1,v1,w1, ...], ≤ k
-
-    /** First triple index sorting strictly after the probe in
-      * (key, value, weight) lex order — insertion lands after equals,
-      * keeping duplicates (multiset semantics).
-      */
-    private def insertPos(buf: Array[Long], nTriples: Int,
-        key: Long, v: Long, w: Long): Int = {
-      var lo = 0
-      var hi = nTriples
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        val bk = buf(3 * mid)
-        val bv = buf(3 * mid + 1)
-        val bw = buf(3 * mid + 2)
-        val le = bk < key || (bk == key &&
-          (bv < v || (bv == v && bw <= w)))
-        if (le) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-
-    override def zero: Array[Long] = Array.emptyLongArray
+      extends SketchAggs.BottomRows[(Long, Long, Long), Array[(Long, Long)]](k, 3) {
 
     override def reduce(buf: Array[Long], x: (Long, Long, Long)): Array[Long] = {
-      val key = x._1
       // genuine A-ES keys are ≥ 0 (−⌊ln(u)/w·1e4⌋·100 with ln(u) ≤ 0):
       // a negative key is the caller's null/invalid sentinel (NULL value
       // or non-positive weight coalesced to -1) — skipped, so hostile
       // rows neither crash the non-nullable UDAF path nor enter the
       // sample (the BottomK convention)
-      if (key < 0) return buf
-      val v = x._2
-      val w = x._3
-      val n = buf.length / 3
-      val pos = insertPos(buf, n, key, v, w)
-      if (n < k) {
-        // growth phase: at most k allocations per partial, ever
-        val out = new Array[Long](buf.length + 3)
-        System.arraycopy(buf, 0, out, 0, 3 * pos)
-        out(3 * pos) = key
-        out(3 * pos + 1) = v
-        out(3 * pos + 2) = w
-        System.arraycopy(buf, 3 * pos, out, 3 * pos + 3, buf.length - 3 * pos)
-        out
-      } else if (pos < k) {
-        // displaces the current maximum triple — steady state, shift IN
-        // PLACE (the KmvSketch zero-allocation discipline; reduce owns
-        // its buffer and the growth path never returns the shared
-        // empty-array zero once non-empty)
-        System.arraycopy(buf, 3 * pos, buf, 3 * pos + 3, 3 * (k - pos - 1))
-        buf(3 * pos) = key
-        buf(3 * pos + 1) = v
-        buf(3 * pos + 2) = w
-        buf
-      } else buf
-    }
-
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      // merge two sorted triple arrays, keep the k smallest triples
-      // (duplicates kept — multiset semantics)
-      val na = a.length / 3
-      val nb = b.length / 3
-      val outN = math.min(na + nb, k)
-      val out = new Array[Long](3 * outN)
-      var i = 0
-      var j = 0
-      var o = 0
-      while (o < outN) {
-        val takeA = j >= nb || (i < na && {
-          val ak = a(3 * i); val bk = b(3 * j)
-          ak < bk || (ak == bk && {
-            val av = a(3 * i + 1); val bv = b(3 * j + 1)
-            av < bv || (av == bv && a(3 * i + 2) <= b(3 * j + 2))
-          })
-        })
-        if (takeA) {
-          out(3 * o) = a(3 * i)
-          out(3 * o + 1) = a(3 * i + 1)
-          out(3 * o + 2) = a(3 * i + 2)
-          i += 1
-        } else {
-          out(3 * o) = b(3 * j)
-          out(3 * o + 1) = b(3 * j + 1)
-          out(3 * o + 2) = b(3 * j + 2)
-          j += 1
-        }
-        o += 1
-      }
-      out
+      if (x._1 < 0) return buf
+      row(0) = x._1
+      row(1) = x._2
+      row(2) = x._3
+      insertRow(buf)
     }
 
     /** Emit the kept (value, weight) pairs sorted by (value, weight)
@@ -162,7 +84,6 @@ object WeightedBottomK {
       pairs
     }
 
-    override def bufferEncoder: Encoder[Array[Long]] = KmvSketch.arrEnc
     override def outputEncoder: Encoder[Array[(Long, Long)]] = pairArrEnc
   }
 

@@ -198,7 +198,7 @@ object AnalyticsQueries {
             countDistinct(col("p_partkey")).as("n_parts"),
             // decimal-route the quantity before the integral cast: a
             // direct double→long cast THROWS on NaN/±Inf under ANSI
-            // (AdversarialNumericSpec), while the decimal route maps
+            // (TotalitySweep row `adv_numeric`), while the decimal route maps
             // non-finites to NULL (skipped by sum) — identity on the
             // integral gate quantities, so the oracle's
             // CAST(l_quantity AS BIGINT) is unchanged

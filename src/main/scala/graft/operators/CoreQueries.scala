@@ -382,7 +382,7 @@ object CoreQueries {
             // try_cast IS the operator: P3's semantics are junk→NULL,
             // and under ANSI a plain cast THROWS when $.k holds a
             // non-numeric payload (get_json_object stringifies a nested
-            // OBJECT at the path — AdversarialJsonSpec's catch; gate
+            // OBJECT at the path — the catch of TotalitySweep row `adv_json`; gate
             // data never exercises it, both engines' try_cast agree)
             expr("try_cast(get_json_object(props, '$.k') AS BIGINT)")
               .as("k"),

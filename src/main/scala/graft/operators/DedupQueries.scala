@@ -148,7 +148,7 @@ object DedupQueries {
   // J(∅,∅) := 0 (union 0 ⇒ intersection 0): two shingle-less docs
   // (< k tokens, whitespace-only) are "not similar", not a crash —
   // ANSI mode throws on the 0/0 the unguarded division would hit
-  // (WhitespaceTextSpec). Inert on any pair with a nonempty set.
+  // (TotalitySweep row `whitespace`). Inert on any pair with a nonempty set.
   private def jaccardOf(inter: Column, uni: Column): Column =
     when(uni === 0, lit(0.0)).otherwise(inter.cast("double") / uni)
 

@@ -130,7 +130,7 @@ object RelationalExtras {
     // (no data-dependent min/max pass), integer bin ids, one shuffle.
     Q("q62_histogram",
       (s, dir) => {
-        // bin-range guard (AdversarialNumericSpec): floor() of a
+        // bin-range guard (TotalitySweep row `adv_numeric`): floor() of a
         // NaN/±Inf price saturates to ±Long.Max and the int cast THROWS
         // under ANSI at executor depth. Spark's total ordering puts NaN
         // above +Inf, so the between() is false for every non-finite

@@ -233,8 +233,8 @@ object SketchStore {
     */
   def streamStoreFor(spark: SparkSession, dir: String): String =
     cachedStore("stream", spark, dir) { store =>
-      val src = tempDir("graft_stream_src") + "/events"
-      val ckpt = tempDir("graft_stream_ckpt")
+      val src = graft.TempDirs("graft_stream_src") + "/events"
+      val ckpt = graft.TempDirs("graft_stream_ckpt")
       graft.Tables.load(spark, dir, "events")
         .repartition(3).write.parquet(src)
       graft.streaming.EventStream.absorbToStore(spark, src, store, ckpt,
@@ -245,7 +245,7 @@ object SketchStore {
     * Sessions are WEAK keys — a closed, unreferenced SparkSession (and
     * its store entries) can be collected instead of living for the
     * process, and the temp dirs themselves are removed by the shutdown
-    * hook in [[tempDir]]. The BUILD runs OUTSIDE any lock (the weak map
+    * hook of [[graft.TempDirs]]. The BUILD runs OUTSIDE any lock (the weak map
     * is only synchronized for the map get/put itself): racing callers
     * may build twice into separate temp dirs (publication is
     * putIfAbsent — first one wins, the loser's orphan dir is swept at
@@ -258,7 +258,7 @@ object SketchStore {
     val key = (kind, dir)
     val cur = stores.get(key)
     if (cur != null) return cur
-    val store = tempDir(s"graft_store_$kind") + "/state"
+    val store = graft.TempDirs(s"graft_store_$kind") + "/state"
     build(store)
     val prev = stores.putIfAbsent(key, store)
     if (prev != null) prev else store
@@ -281,34 +281,6 @@ object SketchStore {
   private val storeCache =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[(String, String), String]]
-
-  /** Create a temp directory registered for recursive removal at JVM
-    * shutdown — gate-store state is session-scoped derived data, so its
-    * lifetime contract is "at most the JVM's" (a DURABLE store is the
-    * caller-chosen-path [[update]]/[[read]] API, which never routes
-    * through here; SketchStoreSpec pins that path).
-    */
-  private def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    tempDirs.add(d)
-    d.toString
-  }
-
-  private val tempDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach { d =>
-        try {
-          val st = java.nio.file.Files.walk(d)
-          try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => { try java.nio.file.Files.deleteIfExists(p) catch { case _: Exception => () } })
-          finally st.close()
-        } catch { case _: Exception => () }
-      }
-    }, "graft-sketchstore-tempdir-sweep"))
-  }
 
   def exists(spark: SparkSession, storeDir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(storeDir)

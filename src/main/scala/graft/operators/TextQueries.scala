@@ -1257,8 +1257,8 @@ object TextQueries {
     // construction; PlanSpec asserts no Generate survives downstream.
     // eager = false (r10 ADVICE): construction stays side-effect-free —
     // the one corpus pass runs at the query's FIRST ACTION, not when
-    // the registry lambda builds the plan (PlanDump/explain-only
-    // consumers used to execute the explode), and all four subtrees
+    // the registry lambda builds the plan (explain-only consumers
+    // used to execute the explode), and all four subtrees
     // share the single lazily-materialized RDD. Fault-tolerance
     // trade-off at 100 TB: localCheckpoint blocks are executor-local
     // (an executor loss fails the query instead of recomputing
@@ -1813,7 +1813,7 @@ object TextQueries {
       // re-split the whole bracketed string once per element —
       // O(word_len²) per vocab row per round, which turns a single 60k
       // char unbroken token (minified blob) into an hours-long training
-      // round (caught by UniformTokenSpec). As an attribute, the split
+      // round (caught by TotalitySweep row `uniform`). As an attribute, the split
       // runs once per row and element_at is an O(1) array read.
       // Guard size>=2 (Spark's sequence(1,0) DESCENDS instead of
       // returning empty).

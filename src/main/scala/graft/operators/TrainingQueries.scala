@@ -30,7 +30,7 @@ object TrainingQueries {
     */
   private val EpochShuffleShards = 16
 
-  /** q114's overflow-free epoch-salt domain (AdversarialIdSpec): ids
+  /** q114's overflow-free epoch-salt domain (TotalitySweep row `adv_id`): ids
     * reduce mod this cap before the ×4+epoch packing, so the mixer
     * input stays below P in plain long arithmetic for ANY id
     * (snowflake-scale, negative) under ANSI mode. Identity for every
@@ -1442,9 +1442,9 @@ object TrainingQueries {
         // r14: checkpoint the O(groups) bounds frame — it is broadcast
         // twice (bin join + quantile selection) and without the
         // materialization the second broadcast re-ran the full
-        // min/max/count pass over the table (plans/r14/
-        // q139_hist_quantiles_before.txt: three parquet scans; now the
-        // two-pass minimum the sketch's doc promises)
+        // min/max/count pass over the table (three parquet scans in
+        // the r14 before-plan; now the two-pass minimum the sketch's
+        // doc promises)
         val b = v.groupBy(col("l_returnflag"))
           .agg(min(col("c")).as("minc"), max(col("c")).as("maxc"),
             count(lit(1)).as("n"))
@@ -1642,7 +1642,7 @@ object TrainingQueries {
     *
     * Determinism: the row hash is over the DIGIT STRING of
     * (l_orderkey, l_linenumber) — hashing the string sidesteps the
-    * packed-long overflow class AdversarialIdSpec caught in q114
+    * packed-long overflow class TotalitySweep row `adv_id` caught in q114
     * (never fold raw ids through long arithmetic); values are exact
     * integer cents (the q139 decimal route); the type-1 sample index
     * ⌈q·m/100⌉ is integer `div` on non-negative operands.

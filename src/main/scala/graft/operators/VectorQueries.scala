@@ -111,7 +111,7 @@ object VectorQueries {
   /** The well-formed-embedding predicate every model ingress filters on:
     * non-null, exactly [[Dims]] components, ALL of them finite. The
     * finiteness conjunct is the fifteenth sweep's lesson
-    * (NonFiniteEmbeddingSpec): a broken encoder emits NaN (an internal
+    * (TotalitySweep row `non_finite`): a broken encoder emits NaN (an internal
     * 0/0) or ±Inf (an overflowed activation), and IEEE semantics carry
     * it silently through every comparison gate until an ANSI floor/cast
     * to integral — `quantize`'s own floor — crashes with a long
@@ -130,12 +130,12 @@ object VectorQueries {
     * a centroid, join a codebook, or be selected — and the driver-side
     * model builds (strideInit, PQ seeds, q122's argmax) dereference the
     * collected arrays, so a null row NPEs at executor depth on a dirty
-    * feed (NullableInputSpec). The same holds for a WRONG-DIMENSION
+    * feed (TotalitySweep row `nullable`). The same holds for a WRONG-DIMENSION
     * embedding (an encoder that emitted nothing, or a row truncated
     * mid-write): fixed-dim kernels (q106's JL components, q112's PC
     * projection, q100's subspace slices) index past its end at executor
-    * depth (EmbeddingEdgeSpec). Model-building queries therefore define
-    * their corpus as the well-formed rows — non-null, exactly
+    * depth (TotalitySweep row `embedding_edge`). Model-building queries
+    * therefore define their corpus as the well-formed rows — non-null, exactly
     * [[Dims]]-dimensional; the gate tables carry only such rows, so
     * oracles are unaffected.
     */
@@ -373,7 +373,7 @@ object VectorQueries {
     * at Double.MIN_VALUE is inert on any non-degenerate cell (real
     * norms are ≥ 1) and defines the all-zero-cell score as exactly 0
     * (the dot is 0 too) instead of an ANSI divide-by-zero at executor
-    * depth (EmbeddingEdgeSpec's zero-vector feed).
+    * depth (the zero-vector feed of TotalitySweep row `embedding_edge`).
     */
   private def intScore(qv: Column, cs: Column, norm: Column): Column =
     intDot(qv, cs).cast("double") /
@@ -839,7 +839,7 @@ object VectorQueries {
             // int8 norms are nonzero (always, on real embeddings —
             // max-abs scaling maps any nonzero vector to a nonzero v8);
             // an all-zero vector scores exactly 0 (dot is 0) instead of
-            // throwing ANSI /0 (EmbeddingEdgeSpec)
+            // throwing ANSI /0 (TotalitySweep row `embedding_edge`)
             (intDot(col("q_v8"), col("v8")).cast("double") /
               greatest(col("q_n8") * col("n8"),
                 lit(java.lang.Double.MIN_VALUE))).as("approx_cos"))
@@ -1305,7 +1305,7 @@ object VectorQueries {
           .withColumn("approx_cos",
             // divisor floored at Double.MIN_VALUE: inert on real data
             // (both norms ≥ 1); an all-zero query or candidate scores
-            // exactly 0 instead of ANSI /0 (EmbeddingEdgeSpec)
+            // exactly 0 instead of ANSI /0 (TotalitySweep row `embedding_edge`)
             col("int_dot").cast("double")
               / greatest(
                 sqrt(col("qn2").cast("double"))

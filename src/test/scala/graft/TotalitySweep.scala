@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -292,7 +290,7 @@ object TotalitySweep {
   def dir(label: String): String = synchronized {
     written.getOrElseUpdate(label, {
       val c = classes.find(_.label == label).get
-      val out = Files.createTempDirectory(s"graft_${c.label}").toString
+      val out = TempDirs(s"graft_${c.label}")
       Tables.names.foreach { t =>
         val df = spark.read.parquet(s"$Base/$t.parquet")
         val poisoned = c.poison.applyOrElse((t, df), (_: (String, DataFrame)) => df)
@@ -409,7 +407,7 @@ class AdversarialPartitionSpec extends AnyFunSuite {
       (r.getSeq[Long](2), r.getSeq[Long](3))).toMap
 
   test("hostile days survive batched dynamic-partition-overwrite absorb == one-shot build") {
-    val dir = Files.createTempDirectory("graft_advpart_st").toString + "/state"
+    val dir = TempDirs("graft_advpart_st") + "/state"
     val batches = (0 to 2).map(i => events.filter(col("event_id") % 3 === i))
     batches.foreach(b => SketchStore.update(spark, dir, b))
     // replay batch 1 — idempotence must hold for hostile partitions too
@@ -427,7 +425,7 @@ class AdversarialPartitionSpec extends AnyFunSuite {
   }
 
   test("per-day pruned reads return exactly the computed day set, hostile values included") {
-    val dir = Files.createTempDirectory("graft_advpart_rd").toString + "/state"
+    val dir = TempDirs("graft_advpart_rd") + "/state"
     SketchStore.update(spark, dir, events)
     val expect = stateOf(SketchStore.batchSketches(events))
     val state = SketchStore.read(spark, dir)

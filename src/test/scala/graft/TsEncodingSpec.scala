@@ -20,7 +20,7 @@ class TsEncodingSpec extends AnyFunSuite {
   // (already timestamp[us] NTZ); the nanos dir rewrites ts as epoch-ns
   // long — exactly what the legacy conf surfaces for TIMESTAMP(NANOS).
   private lazy val (ntzDir, nanosDir): (String, String) = {
-    val base = Files.createTempDirectory("ts_enc").toString
+    val base = TempDirs("ts_enc")
     val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     raw.write.parquet(s"$base/ntz/events.parquet")
     raw.withColumn("ts",

@@ -20,7 +20,7 @@ class VerifySpec extends AnyFunSuite {
     (_, _) => throw new IllegalStateException("deliberate test failure")
 
   test("throwing query leaves an _ERROR sentinel, good query still dumps") {
-    val out = Files.createTempDirectory("verify_spec").toString
+    val out = TempDirs("verify_spec")
     Verify.dump(spark, "/root/testdata/sf0.001", out,
       queries = Map("q_ok" -> good, "q_boom" -> bad),
       oracleSql = Map("q_ok" -> "SELECT 1"))
@@ -36,7 +36,7 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("sentinel replaces a partially-written result dir") {
-    val out = Files.createTempDirectory("verify_spec").toString
+    val out = TempDirs("verify_spec")
     // Simulate a query that wrote some files before throwing on a later
     // task: pre-seed the result dir with a stale parquet.
     good(spark, "").coalesce(1).write.parquet(s"$out/q_boom")

@@ -72,6 +72,21 @@ class HllSketchSpec extends AnyFunSuite {
     assert(empty == Seq.fill(HllSketch.M)(0L))
   }
 
+  test("hllMerge: a NULL row and a short (empty) register array change nothing") {
+    // the rollup's input contract: NULL rows are skipped, and an array
+    // shorter than m folds as all-empty registers — whichever partition
+    // (reduce) or partial merge they land in
+    val regs = replay(hashes(1L to 500L))
+    val rows: Seq[Option[Seq[Long]]] =
+      Seq(None, Some(Seq.empty[Long]), Some(regs), Some(Seq.empty[Long]), None)
+    for (parts <- Seq(1, 5)) {
+      val rolled = rows.toDF("regs").repartition(parts)
+        .agg(HllSketch.hllMerge($"regs").as("regs"))
+        .collect()(0).getSeq[Long](0)
+      assert(rolled == regs, s"parts=$parts")
+    }
+  }
+
   test("rank convention is pinned: WBits+1 - bit-length of the high bits") {
     // golden anchors for the oracle's binary-string-length replay
     assert(HllSketch.rankOf(0L) == 53)                    // w = 0

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,7 +33,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("features survive a parquet round-trip with binary + array columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
+    val dir = TempDirs("graft_media")
     Multimodal.extractFeatures(media).write.mode("overwrite")
       .parquet(s"$dir/features")
     val back = spark.read.parquet(s"$dir/features")

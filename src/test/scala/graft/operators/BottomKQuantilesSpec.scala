@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.functions.BottomK
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -80,7 +80,7 @@ class BottomKQuantilesSpec extends AnyFunSuite {
   }
 
   test("hand-computed fixture: cents 1..10 (complete sample)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bk").toString
+    val dir = TempDirs("graft_bk")
     (1 to 10).map(c => ("A", c.toLong, c, BigDecimal(c) / 100))
       .toDF("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice")
       .withColumn("l_extendedprice", $"l_extendedprice".cast("decimal(12,2)"))
@@ -95,7 +95,7 @@ class BottomKQuantilesSpec extends AnyFunSuite {
 
   test("result is a pure function of the multiset (partitioning-invariant)") {
     val base = q141(spark, "/root/testdata/sf0.01").collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_bk_parts").toString
+    val dir = TempDirs("graft_bk_parts")
     spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .repartition(17).write.parquet(s"$dir/lineitem.parquet")
     val re = q141(spark, dir).collect().map(_.toSeq).toSet

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -54,7 +54,7 @@ class HistQuantilesSpec extends AnyFunSuite {
     * never past it (err_bound = 10 div 256 + 1 = 1).
     */
   test("hand-computed fixture: cents 1..10") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hq").toString
+    val dir = TempDirs("graft_hq")
     (1 to 10).map(c => ("A", BigDecimal(c) / 100))
       .toDF("l_returnflag", "l_extendedprice")
       .select($"l_returnflag", $"l_extendedprice".cast("decimal(12,2)"))
@@ -71,7 +71,7 @@ class HistQuantilesSpec extends AnyFunSuite {
   }
 
   test("all-equal group collapses to the value with bound 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hq_eq").toString
+    val dir = TempDirs("graft_hq_eq")
     Seq.fill(37)(("B", BigDecimal("7.77")))
       .toDF("l_returnflag", "l_extendedprice")
       .select($"l_returnflag", $"l_extendedprice".cast("decimal(12,2)"))
@@ -83,7 +83,7 @@ class HistQuantilesSpec extends AnyFunSuite {
 
   test("result is a pure function of the multiset (partitioning-invariant)") {
     val base = q139(spark, "/root/testdata/sf0.001").collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_hq_parts").toString
+    val dir = TempDirs("graft_hq_parts")
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .repartition(17).write.parquet(s"$dir/lineitem.parquet")
     val re = q139(spark, dir).collect().map(_.toSeq).toSet

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q144's load-bearing properties beyond the DuckDB value gate:
@@ -28,7 +28,7 @@ class KmvSetOpsSpec extends AnyFunSuite {
   test("unsaturated pairs (small fixture): estimates are EXACT set operations") {
     // 3 types over 40 users with known overlaps; every |union| < k=256
     // so the sketch pair math must reproduce exact union/inter/Jaccard
-    val dir = java.nio.file.Files.createTempDirectory("graft_kso").toString
+    val dir = TempDirs("graft_kso")
     val rows =
       (1L to 30L).map(u => ("click", u)) ++
         (21L to 50L).map(u => ("purchase", u)) ++   // |∩ click| = 10
@@ -80,7 +80,7 @@ class KmvSetOpsSpec extends AnyFunSuite {
 
   test("result is a pure function of the input sets (partitioning-invariant)") {
     val base = q144(spark, "/root/testdata/sf0.001").collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_kso_p").toString
+    val dir = TempDirs("graft_kso_p")
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .repartition(17).write.parquet(s"$dir/events.parquet")
     val re = q144(spark, dir).collect().map(_.toSeq).toSet

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, TestSpark}
+import graft.{SparkEntry, TempDirs, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.scalatest.funsuite.AnyFunSuite
@@ -385,7 +385,7 @@ class PlanSpec extends AnyFunSuite {
   test("fact reads prune partitions on the month key") {
     // partition-pruning smoke on the pipeline's partitioned fact output
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = TempDirs("graft_prune")
     graft.pipeline.DataGen.writeAll(spark, s"$dir/csv", nCustomers = 20,
       nProducts = 10, nOrders = 50)
     val r = graft.pipeline.Pipeline.run(spark, s"$dir/csv", s"$dir/out",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -171,7 +171,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     val docs = fixture(120)
     val w = TrainingQueries.DeployW
     assert(w.length == 7, "production checkpoint is bias + 6 features")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fd").toString
+    val dir = TempDirs("graft_fd")
     docs.write.parquet(s"$dir/documents.parquet")
     val q143 = graft.SparkEntry.queries("q143_frozen_deploy")(spark, dir)
       .select($"doc_id", $"smu", $"kept").collect()

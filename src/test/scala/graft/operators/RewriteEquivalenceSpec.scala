@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +30,7 @@ class RewriteEquivalenceSpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("q78 one-pass ladder == r14 join-chain reference on hostile funnel fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_req78").toString
+    val dir = TempDirs("graft_req78")
     val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def t(m: Int) = new java.sql.Timestamp(ts0.getTime + m * 60000L)
     val rows: Seq[(java.lang.Long, String, java.sql.Timestamp)] = Seq(
@@ -87,7 +87,7 @@ class RewriteEquivalenceSpec extends AnyFunSuite {
   }
 
   test("q123 row-local template intersection == explode+join reference on shared-shingle fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_req123").toString
+    val dir = TempDirs("graft_req123")
     val boiler = "alpha beta gamma delta epsilon" // one 5-shingle
     val docs: Seq[(java.lang.Long, String, String)] = Seq(
       // srcA: the template appears in 3 docs (df >= 2 -> boilerplate)

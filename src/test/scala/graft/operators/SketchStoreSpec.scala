@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,7 +44,7 @@ class SketchStoreSpec extends AnyFunSuite {
   }
 
   test("three incremental batches == one-shot build; replay is bit-idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sks").toString + "/state"
+    val dir = TempDirs("graft_sks") + "/state"
     val batches = (0 to 2).map(i => events.filter($"event_id" % 3 === i))
     batches.foreach(b => SketchStore.update(spark, dir, b))
     val incremental = stateMap(dir)
@@ -79,7 +79,7 @@ class SketchStoreSpec extends AnyFunSuite {
 
   test("rollups from state equal direct sketches over all rows") {
     import graft.functions.{Affine61, HllSketch, KmvSketch, PolyHash61Str}
-    val dir = java.nio.file.Files.createTempDirectory("graft_sksr").toString + "/state"
+    val dir = TempDirs("graft_sksr") + "/state"
     (0 to 2).foreach(i =>
       SketchStore.update(spark, dir, events.filter($"event_id" % 3 === i)))
     val state = SketchStore.read(spark, dir)
@@ -123,7 +123,7 @@ class SketchStoreSpec extends AnyFunSuite {
   }
 
   test("audience overlap from state is bit-identical to q144's in-query estimates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skso").toString + "/state"
+    val dir = TempDirs("graft_skso") + "/state"
     (0 to 2).foreach(i =>
       SketchStore.update(spark, dir, events.filter($"event_id" % 3 === i)))
     val fromState = SketchStore.setOpsFromState(SketchStore.read(spark, dir))
@@ -149,7 +149,7 @@ class SketchStoreSpec extends AnyFunSuite {
     // The '__null__' sentinel (scope's convention applied to day)
     // makes the absorb algebra total; this pins incremental ==
     // one-shot on a NULL-ts feed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_sksn").toString + "/state"
+    val dir = TempDirs("graft_sksn") + "/state"
     val nulled = events.withColumn("ts",
       when($"event_id" % 2 === 0, lit(null)).otherwise($"ts"))
     val batches = (0 to 2).map(i => nulled.filter($"event_id" % 3 === i))
@@ -168,7 +168,7 @@ class SketchStoreSpec extends AnyFunSuite {
     // an old-schema store (regs only, no kmv) must FAIL to read, not
     // silently return empty state that a later update() would then
     // partially overwrite
-    val dir = java.nio.file.Files.createTempDirectory("graft_skss").toString + "/state"
+    val dir = TempDirs("graft_skss") + "/state"
     SketchStore.batchSketches(events).drop("kmv")
       .write.partitionBy("day").parquet(dir)
     intercept[org.apache.spark.sql.AnalysisException] {
@@ -177,7 +177,7 @@ class SketchStoreSpec extends AnyFunSuite {
   }
 
   test("an update rewrites only the touched day partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sksp").toString + "/state"
+    val dir = TempDirs("graft_sksp") + "/state"
     SketchStore.update(spark, dir, events)
     val before = listing(dir)
     // a late batch for ONE day
@@ -197,7 +197,7 @@ class SketchStoreSpec extends AnyFunSuite {
   }
 
   test("a single-day read prunes to that partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sksq").toString + "/state"
+    val dir = TempDirs("graft_sksq") + "/state"
     SketchStore.update(spark, dir, events)
     val df = spark.read.parquet(dir).filter($"day" === "2024-01-15")
     df.write.format("noop").mode("overwrite").save()
@@ -207,7 +207,7 @@ class SketchStoreSpec extends AnyFunSuite {
   }
 
   test("an absorbed-nothing store reads as an empty typed frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skse").toString + "/state"
+    val dir = TempDirs("graft_skse") + "/state"
     SketchStore.update(spark, dir, events.filter(lit(false)))
     val state = SketchStore.read(spark, dir)
     assert(state.columns.toSeq == Seq("day", "scope", "regs", "kmv"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import graft.functions.WeightedBottomK
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,7 +28,7 @@ class WeightedBottomKQuantilesSpec extends AnyFunSuite {
   private def q151 = graft.SparkEntry.queries("q151_weighted_bottomk_quantiles")
 
   test("hand-computed fixture: value i with quantity i (complete sample, exact weighted quantiles)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wbk").toString
+    val dir = TempDirs("graft_wbk")
     // cents 1..10, weight(centi-units) = 100·i; W = 5500. The exact
     // type-1 weighted quantiles: p25=5, p50=7, p75=9, p95=10.
     (1 to 10).map(c => ("A", c.toLong, c, BigDecimal(c) / 100, BigDecimal(c)))
@@ -48,7 +48,7 @@ class WeightedBottomKQuantilesSpec extends AnyFunSuite {
   }
 
   test("zero/NULL-weight and NULL-value rows are excluded, never sampled") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wbk0").toString
+    val dir = TempDirs("graft_wbk0")
     Seq(
       ("A", 1L, 1, Some(BigDecimal(1)), Some(0.0)),   // w = 0: excluded
       ("A", 2L, 1, Some(BigDecimal(2)), None),         // w NULL: excluded
@@ -111,7 +111,7 @@ class WeightedBottomKQuantilesSpec extends AnyFunSuite {
 
   test("result is a pure function of the multiset (partitioning-invariant)") {
     val base = q151(spark, "/root/testdata/sf0.01").collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_wbk_parts").toString
+    val dir = TempDirs("graft_wbk_parts")
     spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .repartition(17).write.parquet(s"$dir/lineitem.parquet")
     val re = q151(spark, dir).collect().map(_.toSeq).toSet

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,7 +60,7 @@ class WeightedHistQuantilesSpec extends AnyFunSuite {
     // smallest i with 1+…+i ≥ 27.5 ⇒ 7, vs the unweighted median 5 —
     // the weighting demonstrably moves the answer. err_bound = 1
     // (span 10 « 256 bins ⇒ singleton bins).
-    val dir = java.nio.file.Files.createTempDirectory("graft_whq").toString
+    val dir = TempDirs("graft_whq")
     (1 to 10).map(c => ("A", BigDecimal(c) / 100, c.toDouble))
       .toDF("l_returnflag", "l_extendedprice", "l_quantity")
       .write.parquet(s"$dir/lineitem.parquet")
@@ -76,7 +76,7 @@ class WeightedHistQuantilesSpec extends AnyFunSuite {
   }
 
   test("non-positive-weight rows carry no quantile mass") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_whq0").toString
+    val dir = TempDirs("graft_whq0")
     // ten real rows at 1..10 cents weight 1 unit each, plus a zero-
     // quantity row and a negative-quantity row at 99.99 — both must be
     // invisible (W unchanged, quantiles unmoved)
@@ -92,7 +92,7 @@ class WeightedHistQuantilesSpec extends AnyFunSuite {
 
   test("result is a pure function of the multiset (partitioning-invariant)") {
     val base = q148(spark, "/root/testdata/sf0.001").collect().map(_.toSeq).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft_whq_p").toString
+    val dir = TempDirs("graft_whq_p")
     spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .repartition(17).write.parquet(s"$dir/lineitem.parquet")
     val re = q148(spark, dir).collect().map(_.toSeq).toSet

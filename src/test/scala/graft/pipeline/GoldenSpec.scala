@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.time.LocalDate
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +19,7 @@ class GoldenSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val result: PipelineResult = {
-    val dir = Files.createTempDirectory("graft_golden").toString
+    val dir = TempDirs("graft_golden")
     DataGen.writeAll(spark, s"$dir/csv", nCustomers = 40, nProducts = 15,
       nOrders = 120)
     Pipeline.run(spark, s"$dir/csv", s"$dir/out", LocalDate.of(2025, 7, 15))

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import java.time.LocalDate
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val result: PipelineResult = {
-    val dir = Files.createTempDirectory("graft_e2e").toString
+    val dir = TempDirs("graft_e2e")
     DataGen.writeAll(spark, s"$dir/csv")
     Pipeline.run(spark, s"$dir/csv", s"$dir/out", LocalDate.of(2025, 7, 15))
   }
@@ -231,7 +230,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("SCD2 second run with a changed batch grows history") {
-    val dir = Files.createTempDirectory("graft_scd2").toString
+    val dir = TempDirs("graft_scd2")
     DataGen.writeAll(spark, s"$dir/csv", nCustomers = 20, nProducts = 10,
       nOrders = 50)
     val r1 = Pipeline.run(spark, s"$dir/csv", s"$dir/out",

@@ -5,7 +5,7 @@ import java.time.LocalDate
 
 import scala.collection.concurrent.TrieMap
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.concurrent.Eventually._
@@ -45,7 +45,7 @@ class StagingJobSpec extends AnyFunSuite {
   }
 
   private def fixture(): String = {
-    val dir = Files.createTempDirectory("graft_staging").toString
+    val dir = TempDirs("graft_staging")
     DataGen.writeAll(spark, s"$dir/csv", nCustomers = 20, nProducts = 10,
       nOrders = 50)
     dir

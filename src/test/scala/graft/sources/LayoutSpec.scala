@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.execution.SparkPlan
@@ -22,7 +22,7 @@ class LayoutSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def tmp() = Files.createTempDirectory("graft_layout").toString
+  private def tmp() = TempDirs("graft_layout")
 
   test("partitioned write: filters prune directories, not just rows") {
     val docs = Tables.load(spark, sfDir, "documents")

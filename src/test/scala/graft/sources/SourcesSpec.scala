@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-  private def tmp() = Files.createTempDirectory("graft_src").toString
+  private def tmp() = TempDirs("graft_src")
 
   test("JSONL round-trip: documents survive value-identical, sharded as asked") {
     val docs = Tables.load(spark, sfDir, "documents")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,7 @@ class DocStreamSpec extends AnyFunSuite {
   test("streaming dedup: final drop's matches equal q71's batch result") {
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars").cache()
-    val base = Files.createTempDirectory("graft_docstream").toString
+    val base = TempDirs("graft_docstream")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val st = DocStream.DedupState(
@@ -71,7 +71,7 @@ class DocStreamSpec extends AnyFunSuite {
     // the drop-1 corpus exactly as an uninterrupted run would.
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars").cache()
-    val base = Files.createTempDirectory("graft_docstream_restart").toString
+    val base = TempDirs("graft_docstream_restart")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val st = DocStream.DedupState(
@@ -120,7 +120,7 @@ class DocStreamSpec extends AnyFunSuite {
     // no doubled index rows, no doubled docs, identical matches.
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text").cache()
-    val base = Files.createTempDirectory("graft_docstream_replay").toString
+    val base = TempDirs("graft_docstream_replay")
     val st = DocStream.DedupState(
       indexTable = "docstream_replay_idx",
       docsPath = s"$base/admitted",
@@ -192,7 +192,7 @@ class DocStreamSpec extends AnyFunSuite {
       (0 until 12).map(k => s"w${(seed * 31 + k * 7) % 997}_$k").mkString(" ")
     def mk(ids: Range, f: Long => String) =
       ids.map(i => (i.toLong, f(i.toLong))).toDF("doc_id", "text")
-    val base = Files.createTempDirectory("graft_docstream_conc").toString
+    val base = TempDirs("graft_docstream_conc")
     val st = DocStream.DedupState(
       indexTable = "docstream_conc_idx",
       docsPath = s"$base/admitted",
@@ -255,7 +255,7 @@ class DocStreamSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE `$table`") // simulated mid-compact crash
       process(b2, 2L)
     }
-    val base = Files.createTempDirectory("graft_docstream_crash").toString
+    val base = TempDirs("graft_docstream_crash")
 
     val st = DocStream.DedupState(
       indexTable = "docstream_crash_idx",
@@ -303,7 +303,7 @@ class DocStreamSpec extends AnyFunSuite {
     import graft.operators.{DedupQueries, SpanIndex}
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars").cache()
-    val base = Files.createTempDirectory("graft_spanstream").toString
+    val base = TempDirs("graft_spanstream")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val st = DocStream.SpanState(
@@ -374,7 +374,7 @@ class DocStreamSpec extends AnyFunSuite {
     // histogram must be the exact GROUP BY of its labeled partition.
     val docs = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars").cache()
-    val base = Files.createTempDirectory("graft_filterstream").toString
+    val base = TempDirs("graft_filterstream")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val q = DocStream.filterStream(DocStream.read(spark, dropDir),
@@ -429,7 +429,7 @@ class DocStreamSpec extends AnyFunSuite {
     val w = graft.operators.TrainingQueries.qcTrain(
       graft.operators.TrainingQueries.qcFeatures(docs).localCheckpoint(),
       graft.operators.TrainingQueries.QcRounds)
-    val base = Files.createTempDirectory("graft_scorestream").toString
+    val base = TempDirs("graft_scorestream")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val q = DocStream.scoreStream(DocStream.read(spark, dropDir), w,
@@ -472,7 +472,7 @@ class DocStreamSpec extends AnyFunSuite {
       graft.operators.TrainingQueries.qcFullFeatures(docs).localCheckpoint(),
       graft.operators.TrainingQueries.QcRounds)
     assert(w.length == 7)
-    val base = Files.createTempDirectory("graft_scorefull").toString
+    val base = TempDirs("graft_scorefull")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val q = DocStream.scoreStream(DocStream.read(spark, dropDir), w,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +17,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   private lazy val srcDir: String = {
     // µs-converted copy of the events table as the stream's source drop
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = TempDirs("graft_stream")
     Tables.load(spark, "/root/testdata/sf0.001", "events")
       .write.mode("overwrite").parquet(s"$dir/drop")
     s"$dir/drop"
@@ -250,7 +250,7 @@ class EventStreamSpec extends AnyFunSuite {
       // append mode emits it
       (99L, Timestamp.valueOf("2025-06-01 05:00:00"), 99L, "b",
         Some(1.0): Option[Double], "{}")
-    val dir = Files.createTempDirectory("graft_poison_stream").toString
+    val dir = TempDirs("graft_poison_stream")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/drop")
 
@@ -292,7 +292,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("absorbToStore: stream-absorbed sketch state == one-shot batch absorb; full redelivery is a no-op") {
     import graft.operators.SketchStore
-    val root = Files.createTempDirectory("graft_stream_store").toString
+    val root = TempDirs("graft_stream_store")
     val store = s"$root/state"
     // one file per micro-batch so the store is built across MANY
     // incremental absorbs, not one
@@ -320,7 +320,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("foreachBatch parquet sink: checkpointed write lands every closed window") {
-    val out = Files.createTempDirectory("graft_fes").toString
+    val out = TempDirs("graft_fes")
     EventStream.runToParquet(spark, srcDir, s"$out/data", s"$out/ckpt",
       df => EventStream.windowedCounts(df))
     val landed = EventStream.readSink(spark, s"$out/data")
@@ -330,7 +330,7 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("foreachBatch parquet sink is idempotent on batch replay") {
-    val out = Files.createTempDirectory("graft_fes_replay").toString
+    val out = TempDirs("graft_fes_replay")
     EventStream.runToParquet(spark, srcDir, s"$out/data", s"$out/ckpt1",
       df => EventStream.windowedCounts(df))
     val first = EventStream.readSink(spark, s"$out/data").count()
@@ -346,7 +346,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("streaming dedup: redelivered events collapse to one row each") {
     // double-deliver the whole source (worst-case at-least-once replay)
-    val dupDir = Files.createTempDirectory("graft_dup").toString
+    val dupDir = TempDirs("graft_dup")
     val src = spark.read.schema(EventStream.schema).parquet(srcDir)
     src.unionAll(src).write.mode("overwrite").parquet(s"$dupDir/drop")
     val deduped = EventStream.runToMemory(spark, s"$dupDir/drop", "dedup",
@@ -398,9 +398,9 @@ class EventStreamSpec extends AnyFunSuite {
       Seq(row(4, 60, 1, 4.0), row(5, 4, 2, 5.0)),
       Seq(row(6, 120, 3, 6.0), row(7, -30, 2, 7.0)))
 
-    val dir = Files.createTempDirectory("graft_late").toString
+    val dir = TempDirs("graft_late")
     drops.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory("graft_late_tmp").toString
+      val tmp = TempDirs("graft_late_tmp")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new File(tmp).listFiles()
@@ -547,9 +547,9 @@ class EventStreamSpec extends AnyFunSuite {
 
     def run(chunks: Seq[Seq[(Long, Timestamp, Long, String, Double, String)]],
         name: String): Seq[Seq[Any]] = {
-      val dir = Files.createTempDirectory(s"graft_rate_$name").toString
+      val dir = TempDirs(s"graft_rate_$name")
       chunks.zipWithIndex.foreach { case (rows, i) =>
-        val tmp = Files.createTempDirectory("graft_rate_tmp").toString
+        val tmp = TempDirs("graft_rate_tmp")
         rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
           .coalesce(1).write.mode("overwrite").parquet(tmp)
         val part = new File(tmp).listFiles()
@@ -601,14 +601,14 @@ class EventStreamSpec extends AnyFunSuite {
     // half of that window genuinely late vs the restored watermark and
     // Structured Streaming (correctly) drops it — a first cut of this
     // test split the burst mid-hour and measured exactly that drop.
-    val dir = Files.createTempDirectory("graft_rate_restart").toString
+    val dir = TempDirs("graft_rate_restart")
     val ckpt = s"$dir/ckpt"
     val outP = s"$dir/out"
     val srcDir2 = s"$dir/drops"
     new File(srcDir2).mkdirs()
     def drop(rows: Seq[(Long, Timestamp, Long, String, Double, String)],
         i: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft_rate_rtmp").toString
+      val tmp = TempDirs("graft_rate_rtmp")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new File(tmp).listFiles()

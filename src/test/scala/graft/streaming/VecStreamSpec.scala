@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.{Tables, TestSpark}
+import graft.{Tables, TempDirs, TestSpark}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -45,7 +45,7 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("streaming ANN ingest: each drop's matches equal the batch recompute") {
     val emb = embeddings.cache()
-    val base = Files.createTempDirectory("graft_vecstream").toString
+    val base = TempDirs("graft_vecstream")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val st = VecStream.AnnState(
@@ -91,7 +91,7 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("replay: re-processing a committed batch leaves all state unchanged") {
     val emb = embeddings.cache()
-    val base = Files.createTempDirectory("graft_vecstream_replay").toString
+    val base = TempDirs("graft_vecstream_replay")
     val st = VecStream.AnnState(
       indexTable = "vecstream_replay_idx",
       vecsPath = s"$base/admitted",
@@ -135,7 +135,7 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("compact folds deltas into the bucketed base; probe results unchanged") {
     val emb = embeddings.cache()
-    val base = Files.createTempDirectory("graft_vecstream_compact").toString
+    val base = TempDirs("graft_vecstream_compact")
     val st = VecStream.AnnState(
       indexTable = "vecstream_compact_idx",
       vecsPath = s"$base/admitted",
@@ -174,7 +174,7 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the vecs store — NOT create an empty one and silently lose every
     // compacted match.
     val emb = embeddings.cache()
-    val base = Files.createTempDirectory("graft_vecstream_crash").toString
+    val base = TempDirs("graft_vecstream_crash")
     val st = VecStream.AnnState(
       indexTable = "vecstream_crash_idx",
       vecsPath = s"$base/admitted",
@@ -211,7 +211,7 @@ class VecStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // compacted corpus exactly as an uninterrupted run would — proving a
     // cold restart recovers from the base+delta store, not memory.
     val emb = embeddings.cache()
-    val base = Files.createTempDirectory("graft_vecstream_restart").toString
+    val base = TempDirs("graft_vecstream_restart")
     val dropDir = s"$base/drops"
     Files.createDirectories(java.nio.file.Paths.get(dropDir))
     val st = VecStream.AnnState(
